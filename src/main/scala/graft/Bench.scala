@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   /** 1-minute load average from /proc/loadavg, or -1 where unreadable
     * (non-Linux). Recorded at bench start and end so a snapshot taken on
@@ -9,7 +10,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg1m()
@@ -55,7 +56,7 @@ object Bench {
       // total would IMPROVE because something crashed. Failures go to the
       // errors list with timing -1 and are excluded from the total.
       val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
           false
       }
@@ -88,7 +89,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: $e") }
     spark.stop()
   }

@@ -507,9 +507,9 @@ object Cdx {
   }
 
   /** At-most-once [[mergeCdxj]] per microbatch id — the streaming
-    * maintenance guard (the [[graft.io.Sinks.appendBatchIdempotent]]
-    * contract): the standing dir's dot-marker records the last merged
-    * batch and a replayed id — Structured Streaming re-runs a failed
+    * maintenance guard (the [[graft.io.Sinks.onceForBatch]] gate): the
+    * standing dir's dot-marker records the last merged batch and a
+    * replayed id — Structured Streaming re-runs a failed
     * batch under the SAME id — is skipped, with the writer lease held
     * for the merge like every mutating index verb. The residual
     * crash-between-merge-and-marker window replays the delta, which
@@ -520,12 +520,8 @@ object Cdx {
       delta: DataFrame, batchId: Long,
       maxShardBytes: Long = 0L): Boolean =
     graft.operators.IndexLock.withLock(spark, standingDir, "cdx-merge") {
-      if (batchId <= graft.io.Sinks.lastCommittedBatch(spark, standingDir))
-        false
-      else {
+      graft.io.Sinks.onceForBatch(spark, standingDir, batchId) {
         mergeCdxj(spark, standingDir, delta, maxShardBytes)
-        graft.io.Sinks.recordCommittedBatch(spark, standingDir, batchId)
-        true
       }
     }
 

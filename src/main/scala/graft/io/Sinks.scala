@@ -115,15 +115,15 @@ object Sinks {
       .outputMode("append")
       .start()
 
+  private def markerPath(dir: String) = new HPath(dir, ".graft_last_batch")
+
   /** Last batch id recorded in `dir`'s dot-marker, -1 when absent. A
     * damaged marker (external truncation — writeUtf8's staged write can't
     * produce one) must not wedge the stream forever: treat it as "no
-    * marker", which re-appends at most the one in-flight batch. Public
-    * face of the at-most-once contract, for sinks that gate SEVERAL
-    * appends on one marker (the BM25 index's three tables). */
+    * marker", which re-appends at most the one in-flight batch. */
   def lastCommittedBatch(spark: SparkSession, dir: String): Long = {
     val (fs, _) = fsFor(spark, dir)
-    val marker = new HPath(dir, ".graft_last_batch")
+    val marker = markerPath(dir)
     if (fs.exists(marker))
       scala.util.Try(readUtf8(fs, marker).trim.toLong).getOrElse {
         Console.err.println(s"graft: unparseable batch marker $marker — treating as -1")
@@ -136,46 +136,83 @@ object Sinks {
     * Call only after every append the marker guards has completed. */
   def recordCommittedBatch(spark: SparkSession, dir: String, batchId: Long): Unit = {
     val (fs, _) = fsFor(spark, dir)
-    writeUtf8(fs, new HPath(dir, ".graft_last_batch"), batchId.toString)
+    writeUtf8(fs, markerPath(dir), batchId.toString)
   }
 
-  /** Append one microbatch to a parquet dir at-most-once per `batchId`:
-    * the last committed id is recorded in a dot-marker inside `dir`
-    * (hidden from every parquet reader), and a replayed id — Structured
+  /** The at-most-once batch gate every single-marker streaming sink
+    * commits through: run `write` unless `batchId` is at or below the
+    * last id recorded in `markerDir`'s dot-marker (hidden from every
+    * parquet reader), then record `batchId`. A replayed id — Structured
     * Streaming re-runs the failed batch with the SAME id on recovery — is
-    * skipped instead of double-appended. Returns whether the batch was
-    * written. The marker is written AFTER the append, so the residual
-    * window is a crash between append-completion and marker-write: that
-    * replay duplicates (closing it needs an atomic data+marker commit — a
+    * skipped instead of double-written. Returns whether `write` ran. The
+    * marker is written AFTER `write` returns, so the residual window is
+    * a crash between write-completion and marker-write: that replay
+    * writes again (closing it needs an atomic data+marker commit — a
     * table format's job, out of scope). Single-writer contract, same as
-    * compaction's. */
-  def appendBatchIdempotent(batch: DataFrame, dir: String, batchId: Long,
-      partitionBy: Seq[String] = Nil): Boolean = {
-    val spark = batch.sparkSession
-    if (batchId <= lastCommittedBatch(spark, dir)) false
+    * compaction's; a sink whose writers race takes its lease OUTSIDE the
+    * gate, so no writer slips between the check and the write. */
+  def onceForBatch(spark: SparkSession, markerDir: String, batchId: Long)(
+      write: => Unit): Boolean =
+    if (batchId <= lastCommittedBatch(spark, markerDir)) false
     else {
+      write
+      recordCommittedBatch(spark, markerDir, batchId)
+      true
+    }
+
+  /** Append one microbatch to a parquet dir at-most-once per `batchId`,
+    * gated on `dir`'s own marker ([[onceForBatch]]). Returns whether the
+    * batch was written. */
+  def appendBatchIdempotent(batch: DataFrame, dir: String, batchId: Long,
+      partitionBy: Seq[String] = Nil): Boolean =
+    onceForBatch(batch.sparkSession, dir, batchId) {
       val w = batch.write.mode("append")
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(dir)
-      recordCommittedBatch(spark, dir, batchId)
-      true
     }
-  }
 
   private def stagedDirName(batchId: Long) = s".staged-$batchId"
 
+  /** The MANIFEST-LAST commit of one microbatch into SEVERAL
+    * directories at once: `stage` writes the batch into each of `dirs`
+    * INVISIBLY ([[stageBatch]]), then ONE marker flips (the batch marker
+    * of `manifestDir`, the commit manifest for every dir), then every
+    * staging is published. A reader therefore sees the batch in all
+    * dirs or in none.
+    *
+    * Replay and crash proof. Every commit BEGINS by publishing any
+    * staged batch at or below the marker, BEFORE `stage` runs — so a
+    * sink whose `stage` reads the standing tables (a dedup probe)
+    * never reads a table missing committed rows. A crash BEFORE the
+    * flip leaves nothing visible; the replay re-runs `stage`, which
+    * must recompute the identical batch (a pure function of the batch
+    * and the unchanged standing tables) and restages over its own
+    * leftovers. A crash AFTER the flip rolls forward at the next entry
+    * ([[publishStagedBatch]] is idempotent), and a replayed id
+    * publishes-and-returns without re-running `stage`. Writes `stage`
+    * makes outside `dirs` (a side index under its own
+    * [[onceForBatch]] gate) must land BEFORE the flip, so a pre-flip
+    * crash replays them through their own gate. Every exit refreshes
+    * the session's file lists of `dirs`. Single-writer contract. */
+  def commitStaged(spark: SparkSession, manifestDir: String,
+      dirs: Seq[String], batchId: Long)(stage: => Unit): Unit = {
+    val committed = lastCommittedBatch(spark, manifestDir)
+    dirs.foreach { d =>
+      stagedBatches(spark, d).filter(_ <= committed)
+        .foreach(publishStagedBatch(spark, d, _))
+    }
+    if (batchId > committed) {
+      stage
+      recordCommittedBatch(spark, manifestDir, batchId) // commit
+      dirs.foreach(publishStagedBatch(spark, _, batchId))
+    }
+    dirs.foreach(spark.catalog.refreshByPath)
+  }
+
   /** Write one microbatch INVISIBLY beside `dir`'s data — parquet into
     * the dot-prefixed subdir `<dir>/.staged-<batchId>`, which no
-    * parquet reader of `dir` lists. The staging half of a
-    * MANIFEST-LAST multi-dir commit: a sink that must land a batch in
-    * SEVERAL directories atomically stages each one, flips ONE marker
-    * ([[recordCommittedBatch]] on the manifest dir), then publishes
-    * every staging with [[publishStagedBatch]] — so a reader sees the
-    * batch in all dirs or in none, and a crash at any point either
-    * recomputes (pre-flip: nothing visible, overwrite-restage) or
-    * rolls forward (post-flip: [[publishStagedBatch]] is idempotent).
-    * The protocol's owner is `CorpusPipeline.indexedCommit` /
-    * `mediaCommit`; see their scaladoc for the replay proof. */
+    * parquet reader of `dir` lists. The staging half of
+    * [[commitStaged]]. */
   def stageBatch(batch: DataFrame, dir: String, batchId: Long): Unit =
     batch.write.mode("overwrite")
       .parquet(s"${dir.stripSuffix("/")}/${stagedDirName(batchId)}")
@@ -197,9 +234,8 @@ object Sinks {
     fs.delete(stage, true)
   }
 
-  /** The batch ids staged under `dir` and not yet published — what a
-    * commit's entry roll-forward scans (publish every id at or below
-    * the manifest marker before reading any standing table). */
+  /** The batch ids staged under `dir` and not yet published — what
+    * [[commitStaged]]'s entry roll-forward scans. */
   def stagedBatches(spark: SparkSession, dir: String): Seq[Long] = {
     val (fs, root) = fsFor(spark, dir)
     if (!fs.exists(root)) Nil
@@ -282,7 +318,7 @@ object Sinks {
     * `maxFiles` + one batch's burst, at the documented cost of the
     * compaction swap's single-owner contract — this query IS that owner.
     * The batch-commit marker makes recovery replays skip, not duplicate
-    * (see appendBatchIdempotent for the residual window). Returns the
+    * (see onceForBatch for the residual window). Returns the
     * started query; callers own its lifecycle. */
   def writeParquetStreamMaintained(df: DataFrame, dir: String,
       checkpointDir: String, maxFiles: Int = 64,
@@ -292,11 +328,10 @@ object Sinks {
     require(maxFiles > 0, s"maxFiles must be positive: $maxFiles")
     val commit = (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
-      val (fs, root) = fsFor(spark, dir)
       if (appendBatchIdempotent(batch, dir, batchId, partitionBy) &&
-          countParquetFiles(fs, root) > maxFiles) {
+          parquetFileCount(spark, dir) > maxFiles) {
         compactParquet(spark, dir, targetFileBytes)
-        writeUtf8(fs, new HPath(dir, ".graft_last_batch"), batchId.toString)
+        recordCommittedBatch(spark, dir, batchId)
       }
       spark.catalog.refreshByPath(dir)
       refreshTable.foreach(spark.catalog.refreshTable)

@@ -34,8 +34,8 @@ import graft.functions.VectorFunctions
   * change no existing row and probes over build+appends are bit-identical
   * to a fresh build over the union (AnnIndexSpec proves it). From a
   * stream, use [[annIndexAppendIdempotent]] — a root batch marker makes
-  * replayed microbatches no-ops (`Search.bm25IndexAppendIdempotent`'s
-  * contract, same residual crash window as `Sinks.appendBatchIdempotent`).
+  * replayed microbatches no-ops (the `Sinks.onceForBatch` gate, with its
+  * residual crash window).
   * Appends accumulate files and erode the cid-sorted layout;
   * [[annIndexMaintain]] folds them back past a file threshold.
   */
@@ -100,11 +100,8 @@ object AnnIndex {
       batchId: Long, idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
     val spark = newVecs.sparkSession
     IndexLock.withLock(spark, indexDir, "append") {
-      if (batchId <= graft.io.Sinks.lastCommittedBatch(spark, indexDir)) false
-      else {
+      graft.io.Sinks.onceForBatch(spark, indexDir, batchId) {
         appendBody(newVecs, indexDir, idCol, vecCol)
-        graft.io.Sinks.recordCommittedBatch(spark, indexDir, batchId)
-        true
       }
     }
   }

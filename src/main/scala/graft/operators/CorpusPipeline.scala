@@ -301,25 +301,19 @@ object CorpusPipeline {
     * not O(corpus bands). A signature table that predates the index (or
     * lost it) is backfilled once, inside the commit, before the probe.
     *
-    * Atomicity — the MANIFEST-LAST commit (`Sinks.stageBatch` /
-    * `publishStagedBatch`): every batch stages its corpus rows,
-    * bucket rows, and signatures INVISIBLY (dot-prefixed staging dirs
-    * no reader lists), then flips ONE marker (the corpus dir's batch
-    * marker — the commit manifest for all three dirs), then publishes
-    * the stagings. A reader therefore sees a batch in all three dirs
-    * or in none — there is no docs-present-but-unindexed state in
-    * which later twins of committed docs could slip past the probe. A
-    * crash BEFORE the flip leaves nothing visible; the replay
-    * recomputes the identical kept-set (a pure function of the batch
-    * and the unchanged standing table) and restages over its own
-    * leftovers. A crash AFTER the flip rolls forward: every commit
-    * begins by publishing any staged batch at or below the marker,
-    * BEFORE the probe reads the signature table — so admission never
-    * runs against a table missing committed rows, and a replayed id
-    * publishes-and-returns without re-appending. Single-writer
-    * contract. Every batch's caches (batch signatures, the fresh
-    * survivors) are unpersisted at the end of the commit — a
-    * long-running query holds no growing cache.
+    * Atomicity — the MANIFEST-LAST commit ([[graft.io.Sinks
+    * .commitStaged]], which carries the replay and crash proof): every
+    * batch stages its corpus rows, bucket rows, and signatures
+    * INVISIBLY, flips ONE marker (the corpus dir's — the commit
+    * manifest for all three dirs), then publishes the stagings. A
+    * reader therefore sees a batch in all three dirs or in none —
+    * there is no docs-present-but-unindexed state in which later twins
+    * of committed docs could slip past the probe. The kept-set is a
+    * pure function of the batch and the standing table, so a pre-flip
+    * replay recomputes it identically. Single-writer contract. Every
+    * batch's caches (batch signatures, the fresh survivors) are
+    * unpersisted when the commit ends — a long-running query holds no
+    * growing cache.
     *
     * (k, bands, shingleN, minJaccard) are pinned per corpus — changing
     * them invalidates the accumulated table AND index (see
@@ -329,9 +323,7 @@ object CorpusPipeline {
       idCol: String = "doc_id", textCol: String = "text",
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       minJaccard: Double = 0.8): org.apache.spark.sql.streaming.StreamingQuery = {
-    // the same self-healing commit as [[writeStreamIndexed]], minus the
-    // BM25 index (indexDir = None): per-dir markers, fixed append order,
-    // signatures last — see indexedCommit's scaladoc for the replay proof
+    // the same commit as [[writeStreamIndexed]], minus the BM25 index
     val commit = (batch: DataFrame, batchId: Long) =>
       indexedCommit(batch, batchId, corpusDir, sigDir, indexDir = None,
         idCol, textCol, k, bands, shingleN, minJaccard, maxIndexFiles = 64)
@@ -350,7 +342,7 @@ object CorpusPipeline {
     *
     * Crash safety: the corpus/bucket/signature trio commits through
     * the MANIFEST-LAST protocol (stage all three → flip the corpus
-    * marker → publish; see [[writeStreamIncrementalDedup]] for the
+    * marker → publish; [[graft.io.Sinks.commitStaged]] holds the
     * replay proof — all-or-nothing visibility, pre-flip crashes
     * recompute, post-flip crashes roll forward at the next entry).
     * The BM25 append rides its own marker BEFORE the flip: a pre-flip
@@ -390,99 +382,83 @@ object CorpusPipeline {
       idCol: String, textCol: String,
       k: Int, bands: Int, shingleN: Int, minJaccard: Double,
       maxIndexFiles: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = batch.sparkSession
     val bucketDir = sigDir + ".buckets"
-    val dirs = Seq(corpusDir, bucketDir, sigDir)
-    // MANIFEST-LAST entry: publish any committed-but-unpublished
-    // staging first (a crash between the marker flip and publication),
-    // BEFORE anything reads the signature table — admission never runs
-    // against a table missing committed rows
-    val committed = graft.io.Sinks.lastCommittedBatch(spark, corpusDir)
-    dirs.foreach { d =>
-      graft.io.Sinks.stagedBatches(spark, d).filter(_ <= committed)
-        .foreach(b => graft.io.Sinks.publishStagedBatch(spark, d, b))
-    }
-    if (batchId <= committed) {
-      dirs.foreach(spark.catalog.refreshByPath)
-      return // replayed id: the batch is committed; roll-forward above
-    }
-    val fs = new HPath(sigDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasParquet(dir: String): Boolean = {
-      val p = new HPath(dir)
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-    val hasTable = hasParquet(sigDir)
-    val batchSigs = Dedup
-      .minhashSignatureTable(batch, idCol, textCol, k, shingleN)
-      .persist()
-    // INTRA-batch twins first: the corpus probe only sees the STANDING
-    // table, so near-identical docs arriving in the SAME microbatch would
-    // all pass it (and the first batch ever passed wholesale). Greedy
-    // min-keeper inside the batch — drop a doc iff it near-dups a
-    // smaller-id batch doc, the same rule as the probe's min(ref_id).
-    // Chains (A~B~C, A≁C) drop C though its witness B was itself dropped —
-    // the over-dropping a CC keeper also applies. Pure function of the
-    // batch, so a crash replay recomputes the identical kept-set;
-    // batch-sized work under the microbatch contract.
-    val intraLosers = Dedup.minhashNearDupPairs(batch, idCol, textCol,
-        k, bands, shingleN, minJaccard, sigs = Some(batchSigs))
-      .select(col("id_b").as(idCol)).distinct()
-    val batchKept = batch.join(intraLosers, Seq(idCol), "left_anti")
-    val fresh =
-      if (!hasTable) batchKept
-      else {
-        if (!hasParquet(bucketDir)) // pre-index table: backfill once
-          Dedup.minhashBucketTable(spark.read.parquet(sigDir), k, bands)
-            .write.mode("overwrite").parquet(bucketDir)
-        else {
-          // same partial-divergence repair as writeStreamIncrementalDedup
-          val unindexed = spark.read.parquet(sigDir)
-            .join(spark.read.parquet(bucketDir).select("doc_id").distinct(),
-              Seq("doc_id"), "left_anti")
-          if (!unindexed.isEmpty) {
-            Dedup.minhashBucketTable(unindexed, k, bands)
-              .write.mode("append").parquet(bucketDir)
-            spark.catalog.refreshByPath(bucketDir)
-          }
-        }
+    graft.io.Sinks.commitStaged(spark, corpusDir,
+        Seq(corpusDir, bucketDir, sigDir), batchId) {
+      val hasTable = graft.io.Sinks.parquetExists(spark, sigDir)
+      if (hasTable)
+        syncBucketIndex(spark, sigDir, bucketDir)(
+          Dedup.minhashBucketTable(_, k, bands))
+      val batchSigs = Dedup
+        .minhashSignatureTable(batch, idCol, textCol, k, shingleN)
+        .persist()
+      // INTRA-batch twins first: the corpus probe only sees the STANDING
+      // table, so near-identical docs arriving in the SAME microbatch would
+      // all pass it (and the first batch ever passed wholesale). Greedy
+      // min-keeper inside the batch — drop a doc iff it near-dups a
+      // smaller-id batch doc, the same rule as the probe's min(ref_id).
+      // Chains (A~B~C, A≁C) drop C though its witness B was itself dropped —
+      // the over-dropping a CC keeper also applies. Pure function of the
+      // batch, so a crash replay recomputes the identical kept-set;
+      // batch-sized work under the microbatch contract.
+      val intraLosers = Dedup.minhashNearDupPairs(batch, idCol, textCol,
+          k, bands, shingleN, minJaccard, sigs = Some(batchSigs))
+        .select(col("id_b").as(idCol)).distinct()
+      val batchKept = batch.join(intraLosers, Seq(idCol), "left_anti")
+      val fresh =
+        if (!hasTable) batchKept
         // batchSigs is a superset of batchKept's signatures (it still
         // carries the intra-batch losers) — harmless: extra candidates,
         // and the output joins back to batchKept's rows only
-        Dedup.minhashDedupAgainst(batchKept, spark.read.parquet(sigDir),
+        else Dedup.minhashDedupAgainst(batchKept, spark.read.parquet(sigDir),
             idCol, textCol, k, bands, shingleN, minJaccard,
             batchSigs = Some(batchSigs),
             refBuckets = Some(spark.read.parquet(bucketDir)))
           .filter(col("is_new")).drop("dup_of_ref", "is_new")
+      val freshP = fresh.persist()
+      val freshSigs = batchSigs.join(
+        freshP.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
+        .persist()
+      // every standing-table read above sees the pre-batch state; the
+      // BM25 append rides its own marker and lands before the flip
+      try {
+        graft.io.Sinks.stageBatch(freshP, corpusDir, batchId)
+        graft.io.Sinks.stageBatch(
+          Dedup.minhashBucketTable(freshSigs, k, bands), bucketDir, batchId)
+        graft.io.Sinks.stageBatch(freshSigs, sigDir, batchId)
+        indexDir.foreach { idx =>
+          if (graft.operators.Search.bm25IndexAppendIdempotent(
+              freshP, idx, batchId, idCol, textCol))
+            graft.operators.Search.bm25IndexMaintain(spark, idx, maxIndexFiles)
+        }
+      } finally {
+        freshSigs.unpersist()
+        freshP.unpersist()
+        batchSigs.unpersist()
       }
-    val freshP = fresh.persist()
-    val freshSigs = batchSigs.join(
-      freshP.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
-      .persist()
-    // stage all three dirs INVISIBLY (every standing-table read above
-    // happened against the pre-batch state), then the BM25 append under
-    // its own marker, then flip the ONE manifest marker, then publish —
-    // a reader sees the batch in all three dirs or in none, and a crash
-    // at any point either recomputes the identical kept-set (pre-flip:
-    // nothing visible) or rolls forward at the next entry (post-flip)
-    graft.io.Sinks.stageBatch(freshP, corpusDir, batchId)
-    graft.io.Sinks.stageBatch(
-      Dedup.minhashBucketTable(freshSigs, k, bands), bucketDir, batchId)
-    graft.io.Sinks.stageBatch(freshSigs, sigDir, batchId)
-    indexDir.foreach { idx =>
-      if (graft.operators.Search.bm25IndexAppendIdempotent(
-          freshP, idx, batchId, idCol, textCol))
-        graft.operators.Search.bm25IndexMaintain(spark, idx, maxIndexFiles)
     }
-    graft.io.Sinks.recordCommittedBatch(spark, corpusDir, batchId) // commit
-    dirs.foreach(d => graft.io.Sinks.publishStagedBatch(spark, d, batchId))
-    freshSigs.unpersist()
-    freshP.unpersist()
-    batchSigs.unpersist()
-    dirs.foreach(spark.catalog.refreshByPath)
-    ()
   }
+
+  /** Bring the band-bucket index at `bucketDir` level with the signature
+    * table at `sigDir` before a probe reads it: a table that predates
+    * its index (or lost it) is backfilled whole, and sig rows the index
+    * is missing (a partial divergence) are appended. `buckets` maps
+    * signature rows to the sink's bucket rows. */
+  private def syncBucketIndex(spark: SparkSession, sigDir: String,
+      bucketDir: String)(buckets: DataFrame => DataFrame): Unit =
+    if (!graft.io.Sinks.parquetExists(spark, bucketDir))
+      buckets(spark.read.parquet(sigDir))
+        .write.mode("overwrite").parquet(bucketDir)
+    else {
+      val unindexed = spark.read.parquet(sigDir)
+        .join(spark.read.parquet(bucketDir).select("doc_id").distinct(),
+          Seq("doc_id"), "left_anti")
+      if (!unindexed.isEmpty) {
+        buckets(unindexed).write.mode("append").parquet(bucketDir)
+        spark.catalog.refreshByPath(bucketDir)
+      }
+    }
 
   /** Retract documents from every standing artifact the sinks maintain —
     * the takedown path (the legal reality of crawl corpora). Deleted ids
@@ -684,92 +660,57 @@ object CorpusPipeline {
     * divergence-repair, and cross-modality scenarios directly. */
   private[graft] def mediaCommit(batch: DataFrame, batchId: Long,
       corpusDir: String, sigDir: String, maxHamming: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = batch.sparkSession
     val bucketDir = sigDir + ".buckets"
-    val dirs = Seq(corpusDir, bucketDir, sigDir)
-    // manifest-last entry roll-forward — same protocol as indexedCommit
-    val committed = graft.io.Sinks.lastCommittedBatch(spark, corpusDir)
-    dirs.foreach { d =>
-      graft.io.Sinks.stagedBatches(spark, d).filter(_ <= committed)
-        .foreach(b => graft.io.Sinks.publishStagedBatch(spark, d, b))
+    graft.io.Sinks.commitStaged(spark, corpusDir,
+        Seq(corpusDir, bucketDir, sigDir), batchId) {
+      val hasTable = graft.io.Sinks.parquetExists(spark, sigDir)
+      if (hasTable) syncBucketIndex(spark, sigDir, bucketDir)(bucketRows)
+      val modalities = Seq("image", "audio", "audio_stream", "mp4_stream",
+        "ogg_stream", "mkv_stream")
+      val sigs = mediaSigs(batch).persist()
+      try {
+        sigs.count() // materialize: exact stats → broadcast probes (see minhashDedupAgainst)
+        // intra-batch twins per modality — same min-id-keeper rule as text
+        val intraLosers = modalities.map(mod =>
+            Dedup.hash64NearDupPairs(sigs.filter(col("modality") === mod),
+              maxHamming, maxBlockSize = 1000,
+              sizeByVolume = false) // microbatch-sized, decode-bound lineage
+              .select(col("id_b").as("doc_id")))
+          .reduce(_ union _).distinct()
+        val keptSigs = sigs.join(intraLosers, Seq("doc_id"), "left_anti")
+        val fresh =
+          if (!hasTable) keptSigs
+          else modalities.map { mod =>
+            Dedup.hash64DedupAgainst(
+                keptSigs.filter(col("modality") === mod)
+                  .select("doc_id", "simhash"),
+                spark.read.parquet(bucketDir)
+                  .filter(col("modality") === mod)
+                  .select("chunk", "v", "doc_id", "simhash"),
+                maxHamming)
+              .filter(col("is_new")).select("doc_id")
+          }.reduce(_ union _)
+            .join(keptSigs, Seq("doc_id")) // reattach modality + hash
+        // EAGER local checkpoint, not persist: the kept-set's plan reads
+        // bucketDir (the standing-index probe), and the commit's own bucket
+        // append below invalidates any cache keyed on that path — a
+        // persisted `fresh` would silently RECOMPUTE at the signature
+        // append, probe its own just-appended buckets, classify every fresh
+        // row as a dup of itself, and append an empty signature batch
+        // (observed exactly so). The checkpoint pins the kept-set before
+        // any directory is touched.
+        val freshP = fresh.localCheckpoint(true)
+        // corpus rows: fresh hashable media + every unhashable pass-through
+        val keepIds = freshP.select(col("doc_id").as("media_id"))
+          .union(batch.select(col("media_id"))
+            .join(sigs.select(col("doc_id").as("media_id")), Seq("media_id"), "left_anti"))
+        val corpusRows = batch.join(keepIds, Seq("media_id"), "left_semi")
+        graft.io.Sinks.stageBatch(corpusRows, corpusDir, batchId)
+        graft.io.Sinks.stageBatch(bucketRows(freshP), bucketDir, batchId)
+        graft.io.Sinks.stageBatch(freshP, sigDir, batchId)
+      } finally sigs.unpersist()
     }
-    if (batchId <= committed) {
-      dirs.foreach(spark.catalog.refreshByPath)
-      return
-    }
-    val fs = new HPath(sigDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasParquet(dir: String): Boolean = {
-      val p = new HPath(dir)
-      fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    }
-    val modalities = Seq("image", "audio", "audio_stream", "mp4_stream",
-      "ogg_stream", "mkv_stream")
-    val sigs = mediaSigs(batch).persist()
-    sigs.count() // materialize: exact stats → broadcast probes (see minhashDedupAgainst)
-    // intra-batch twins per modality — same min-id-keeper rule as text
-    val intraLosers = modalities.map(mod =>
-        Dedup.hash64NearDupPairs(sigs.filter(col("modality") === mod),
-          maxHamming, maxBlockSize = 1000,
-          sizeByVolume = false) // microbatch-sized, decode-bound lineage
-          .select(col("id_b").as("doc_id")))
-      .reduce(_ union _).distinct()
-    val keptSigs = sigs.join(intraLosers, Seq("doc_id"), "left_anti")
-    val fresh =
-      if (!hasParquet(sigDir)) keptSigs
-      else {
-        if (!hasParquet(bucketDir)) // pre-index table: backfill once
-          bucketRows(spark.read.parquet(sigDir))
-            .write.mode("overwrite").parquet(bucketDir)
-        else {
-          // partial-divergence repair: every commit backfills sig rows
-          // the bucket index is missing (the text sink's contract)
-          val unindexed = spark.read.parquet(sigDir)
-            .join(spark.read.parquet(bucketDir).select("doc_id").distinct(),
-              Seq("doc_id"), "left_anti")
-          if (!unindexed.isEmpty) {
-            bucketRows(unindexed)
-              .write.mode("append").parquet(bucketDir)
-            spark.catalog.refreshByPath(bucketDir)
-          }
-        }
-        modalities.map { mod =>
-          Dedup.hash64DedupAgainst(
-              keptSigs.filter(col("modality") === mod)
-                .select("doc_id", "simhash"),
-              spark.read.parquet(bucketDir)
-                .filter(col("modality") === mod)
-                .select("chunk", "v", "doc_id", "simhash"),
-              maxHamming)
-            .filter(col("is_new")).select("doc_id")
-        }.reduce(_ union _)
-          .join(keptSigs, Seq("doc_id")) // reattach modality + hash
-      }
-    // EAGER local checkpoint, not persist: the kept-set's plan reads
-    // bucketDir (the standing-index probe), and the commit's own bucket
-    // append below invalidates any cache keyed on that path — a
-    // persisted `fresh` would silently RECOMPUTE at the signature
-    // append, probe its own just-appended buckets, classify every fresh
-    // row as a dup of itself, and append an empty signature batch
-    // (observed exactly so). The checkpoint pins the kept-set before
-    // any directory is touched.
-    val freshP = fresh.localCheckpoint(true)
-    // corpus rows: fresh hashable media + every unhashable pass-through
-    val keepIds = freshP.select(col("doc_id").as("media_id"))
-      .union(batch.select(col("media_id"))
-        .join(sigs.select(col("doc_id").as("media_id")), Seq("media_id"), "left_anti"))
-    val corpusRows = batch.join(keepIds, Seq("media_id"), "left_semi")
-    // stage → one marker flip → publish (the manifest-last commit; the
-    // kept-set was checkpointed before any directory is touched)
-    graft.io.Sinks.stageBatch(corpusRows, corpusDir, batchId)
-    graft.io.Sinks.stageBatch(bucketRows(freshP), bucketDir, batchId)
-    graft.io.Sinks.stageBatch(freshP, sigDir, batchId)
-    graft.io.Sinks.recordCommittedBatch(spark, corpusDir, batchId) // commit
-    dirs.foreach(d => graft.io.Sinks.publishStagedBatch(spark, d, batchId))
-    sigs.unpersist()
-    dirs.foreach(spark.catalog.refreshByPath)
-    ()
   }
 
   /** (`chunk`, `v`, `doc_id`, `simhash`, `modality`) bucket rows of a

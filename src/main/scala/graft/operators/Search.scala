@@ -189,22 +189,19 @@ object Search {
     }
 
   /** At-most-once [[bm25IndexAppend]]: the three table appends are gated
-    * on one batch marker at the index ROOT (`Sinks.lastCommittedBatch`),
+    * on one batch marker at the index ROOT (`Sinks.onceForBatch`),
     * written only after all three complete — a replayed microbatch
     * (Structured Streaming re-runs a failed batch with the SAME id) is
     * skipped instead of double-counting df/tf. Residual window: a crash
     * between the first append and the marker write duplicates on replay,
-    * same as `Sinks.appendBatchIdempotent`'s documented window. Returns
-    * whether the batch was written. */
+    * the gate's documented window. Returns whether the batch was
+    * written. */
   def bm25IndexAppendIdempotent(newDocs: DataFrame, indexDir: String,
       batchId: Long, idCol: String = "doc_id", textCol: String = "text"): Boolean = {
     val spark = newDocs.sparkSession
     IndexLock.withLock(spark, indexDir, "append") {
-      if (batchId <= graft.io.Sinks.lastCommittedBatch(spark, indexDir)) false
-      else {
+      graft.io.Sinks.onceForBatch(spark, indexDir, batchId) {
         writeIndex(newDocs, indexDir, "append", idCol, textCol)
-        graft.io.Sinks.recordCommittedBatch(spark, indexDir, batchId)
-        true
       }
     }
   }

@@ -166,7 +166,7 @@ object TokenShards {
     * batches order by arrival, the only order a stream can promise).
     * Replayed microbatch
     * ids are skipped via the root batch marker, so crash recovery never
-    * double-writes tokens — the `Sinks.appendBatchIdempotent` contract.
+    * double-writes tokens — the `Sinks.onceForBatch` gate.
     * Single-writer, like every standing-artifact sink here. */
   def writeStreamTokenShards(encoded: DataFrame, dir: String,
       checkpointDir: String, tokensPerShard: Long, vocabSize: Int,
@@ -190,24 +190,18 @@ object TokenShards {
     * was written. */
   def writeTokenShardsIdempotent(batch: DataFrame, dir: String,
       batchId: Long, tokensPerShard: Long, vocabSize: Int, eosId: Int,
-      idCol: String = "doc_id", idsCol: String = "token_ids"): Boolean = {
-    val spark = batch.sparkSession
-    if (batchId <= graft.io.Sinks.lastCommittedBatch(spark, dir)) false
-    else {
+      idCol: String = "doc_id", idsCol: String = "token_ids"): Boolean =
+    graft.io.Sinks.onceForBatch(batch.sparkSession, dir, batchId) {
       // materialize before sharding: the writer's range partitioning
       // SAMPLES its child (an extra evaluation a one-shot streaming
       // batch does not support), and the prefix-sum makes two more
       // passes — all of which must hit the cache, not the source
       val local = batch.persist(StorageLevel.MEMORY_AND_DISK)
       local.count()
-      try {
-        writeTokenShards(local, f"$dir%s/batch-$batchId%05d",
-          tokensPerShard, vocabSize, eosId, idCol, idsCol)
-        graft.io.Sinks.recordCommittedBatch(spark, dir, batchId)
-      } finally local.unpersist()
-      true
+      try writeTokenShards(local, f"$dir%s/batch-$batchId%05d",
+        tokensPerShard, vocabSize, eosId, idCol, idsCol)
+      finally local.unpersist()
     }
-  }
 
   /** Read shards back as (`shard_id`, `token_ids`) — the verification
     * face of the writer (a training loader mmaps the files directly).

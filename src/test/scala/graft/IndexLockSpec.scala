@@ -189,17 +189,19 @@ class IndexLockSpec extends SparkSpec {
     // breaker's fresh lock on its way out (token-verified release)
     val dir2 = tmp("graft_lock_spare")
     val slowStarted = new java.util.concurrent.CountDownLatch(1)
+    val breakerHolding = new java.util.concurrent.CountDownLatch(1)
+    // the slow writer stays inside its lease until the breaker holds the
+    // lock, whatever the machine's load — no timing window to miss
     val slow = new Thread(() => {
       IndexLock.withLock(spark, dir2, "slow") {
         slowStarted.countDown()
-        Thread.sleep(600)
+        breakerHolding.await(30, java.util.concurrent.TimeUnit.SECONDS)
       }
     })
     slow.start(); slowStarted.await()
     Thread.sleep(100)
     // breaker treats the 100ms-old lease as expired under a 50ms TTL
     // and holds PAST the slow writer's exit
-    val breakerHolding = new java.util.concurrent.CountDownLatch(1)
     val breakerDone = new java.util.concurrent.CountDownLatch(1)
     val breaker = new Thread(() => {
       IndexLock.withLock(spark, dir2, "breaker", leaseMs = 50L) {

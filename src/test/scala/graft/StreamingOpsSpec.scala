@@ -370,5 +370,14 @@ class StreamingOpsSpec extends SparkSpec {
     assert(!Sinks.appendBatchIdempotent(
       Seq((99999L, "replay")).toDF("doc_id", "text"), dir, batchId = 0))
     assert(spark.read.parquet(dir).count() == 600L)
+    // a damaged marker reads as "no marker" rather than wedging the
+    // stream: the next gated append writes
+    val (fs, _) = Sinks.fsFor(spark, dir)
+    val marker = fs.create(new org.apache.hadoop.fs.Path(dir, ".graft_last_batch"), true)
+    try marker.write("not-a-batch-id".getBytes("UTF-8")) finally marker.close()
+    assert(Sinks.lastCommittedBatch(spark, dir) == -1L)
+    assert(Sinks.appendBatchIdempotent(
+      Seq((99998L, "after damage")).toDF("doc_id", "text"), dir, batchId = 0))
+    assert(spark.read.parquet(dir).count() == 601L)
   }
 }
