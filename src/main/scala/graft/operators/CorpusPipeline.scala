@@ -390,8 +390,13 @@ object CorpusPipeline {
       if (hasTable)
         syncBucketIndex(spark, sigDir, bucketDir)(
           Dedup.minhashBucketTable(_, k, bands))
+      // the kept-set reads the batch in several jobs (signatures, the
+      // intra-batch anti-join, the standing probe); one cached copy keeps
+      // each from re-running the batch's lineage — a WARC decode is a
+      // 21-face union, about 2 min a commit when re-run per job
+      val batchP = batch.persist()
       val batchSigs = Dedup
-        .minhashSignatureTable(batch, idCol, textCol, k, shingleN)
+        .minhashSignatureTable(batchP, idCol, textCol, k, shingleN)
         .persist()
       // INTRA-batch twins first: the corpus probe only sees the STANDING
       // table, so near-identical docs arriving in the SAME microbatch would
@@ -402,10 +407,10 @@ object CorpusPipeline {
       // the over-dropping a CC keeper also applies. Pure function of the
       // batch, so a crash replay recomputes the identical kept-set;
       // batch-sized work under the microbatch contract.
-      val intraLosers = Dedup.minhashNearDupPairs(batch, idCol, textCol,
+      val intraLosers = Dedup.minhashNearDupPairs(batchP, idCol, textCol,
           k, bands, shingleN, minJaccard, sigs = Some(batchSigs))
         .select(col("id_b").as(idCol)).distinct()
-      val batchKept = batch.join(intraLosers, Seq(idCol), "left_anti")
+      val batchKept = batchP.join(intraLosers, Seq(idCol), "left_anti")
       val fresh =
         if (!hasTable) batchKept
         // batchSigs is a superset of batchKept's signatures (it still
@@ -436,6 +441,7 @@ object CorpusPipeline {
         freshSigs.unpersist()
         freshP.unpersist()
         batchSigs.unpersist()
+        batchP.unpersist()
       }
     }
   }
