@@ -1423,7 +1423,7 @@ object ScaleBench {
       }
 
       // retraction: a FIXED 500-doc takedown against both standing
-      // indexes. BM25 derives its negative df/stats increments from the
+      // indexes. BM25 derives its negative stats increment from the
       // victims' own postings — one parallel postings scan, so the cost
       // follows the INDEX (batch takedowns amortize it); the ANN side is
       // a registry append, O(batch) whatever the corpus. The post-delete
@@ -1979,7 +1979,7 @@ object ScaleBench {
       "embeddings for the rerank — so probe time stays ~flat too. " +
       "The retraction rows take the SAME fixed 500-doc batch down at " +
       "every scale: bm25_delete's cost is one parallel postings scan " +
-      "(the negative df/stats increments derive from the victims' own " +
+      "(the negative stats increment derives from the victims' own " +
       "rows — linear in the index, so batch your takedowns), ann_delete " +
       "is a registry append (O(batch), flat), and " +
       "bm25_probe_after_delete shows the probe keeping its flat path " +

@@ -70,13 +70,14 @@ object Sinks {
     renameOrFail(fs, tmp, p)
   }
 
+  /** The reference's TSV conventions, shared by the batch and streaming
+    * writers: tab-separated, header line, nulls as `NA`, empty strings
+    * as empty fields. */
+  private val TsvOptions = Map(
+    "sep" -> "\t", "header" -> "true", "nullValue" -> "NA", "emptyValue" -> "")
+
   private def tsvWriter(df: DataFrame) =
-    df.write
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "NA")
-      .option("emptyValue", "")
-      .mode("overwrite")
+    df.write.options(TsvOptions).mode("overwrite")
 
   /** Partition-parallel TSV write (K1). One part file per partition.
     * `partitionBy` columns become `col=value/` directories (hive layout)
@@ -106,10 +107,7 @@ object Sinks {
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream
       .format("csv")
-      .option("sep", "\t")
-      .option("header", "true")
-      .option("nullValue", "NA")
-      .option("emptyValue", "")
+      .options(TsvOptions)
       .option("path", dir)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
@@ -459,8 +457,6 @@ object Sinks {
     }
   }
 
-  /** Rewrite one flat dir of parquet files to its byte-budget file count
-    * and swap it in (two renames — see compactParquet's contract). */
   /** Per-task file-open cap for [[compactLeaf]]: `coalesce(n)` gives the
     * rewrite exactly n tasks, and each task OPENS its share of the input
     * files sequentially — for a leaf whose byte budget wants few output
@@ -476,6 +472,8 @@ object Sinks {
     * dominates and this floor is inert. */
   private val MaxFilesPerCompactTask = 64
 
+  /** Rewrite one flat dir of parquet files to its byte-budget file count
+    * and swap it in (two renames — see compactParquet's contract). */
   private def compactLeaf(spark: SparkSession, fs: FileSystem, source: HPath,
       targetFileBytes: Long): Int = {
     val inputFiles = fs.listStatus(source).toSeq
@@ -484,18 +482,9 @@ object Sinks {
     val nFiles = math.max(
       math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt),
       math.ceil(inputFiles.size.toDouble / MaxFilesPerCompactTask).toInt)
-    val parent = fs.makeQualified(source).getParent
-    val tmp = new HPath(parent, s".${source.getName}.compact-tmp")
-    fs.delete(tmp, true)
     // reading the leaf directly sees exactly the file-body schema (no
     // inferred partition columns), so the rewrite is layout-neutral
-    spark.read.parquet(source.toString).coalesce(nFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val retired = new HPath(parent, s".${source.getName}.compact-old")
-    fs.delete(retired, true)
-    renameOrFail(fs, fs.makeQualified(source), retired)
-    renameOrFail(fs, tmp, fs.makeQualified(source))
-    fs.delete(retired, true)
+    rewriteParquetInPlace(spark, source.toString)(_.coalesce(nFiles))
     nFiles
   }
 

@@ -472,8 +472,7 @@ object Dedup {
     * from a recomputed lineage (the SimHash caller's measured 4×-eval
     * lesson); a parquet-backed signature frame needs no cache. */
   private[graft] def hash64NearDupPairs(sigs: DataFrame,
-      maxHamming: Int, maxBlockSize: Int,
-      sizeByVolume: Boolean = true): DataFrame = {
+      maxHamming: Int, maxBlockSize: Int, sizeByVolume: Boolean): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming out of range [0, 15]: $maxHamming")
     require(maxBlockSize > 1, s"maxBlockSize must exceed 1: $maxBlockSize")
@@ -614,18 +613,15 @@ object Dedup {
       maxHamming: Int = 8, maxBucketSize: Int = 100000): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming out of range [0, 15]: $maxHamming")
+    require(maxBucketSize > 0, s"maxBucketSize must be positive: $maxBucketSize")
     val budget = maxHamming / 4
     val masks: Seq[Long] = (0 to budget).flatMap(k =>
       (0 until 16).combinations(k).map(_.foldLeft(0L)((m, b) => m | (1L << b))))
-    val kept =
-      if (maxBucketSize <= 0) refBuckets
-      else {
-        val hot = refBuckets.groupBy(col("chunk"), col("v"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxBucketSize)
-          .select("chunk", "v")
-        refBuckets.join(hot, Seq("chunk", "v"), "left_anti")
-      }
+    val hot = refBuckets.groupBy(col("chunk"), col("v"))
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxBucketSize)
+      .select("chunk", "v")
+    val kept = refBuckets.join(hot, Seq("chunk", "v"), "left_anti")
     val probe = hash64BucketTable(batchSigs.select("doc_id", "simhash"))
       .select(col("doc_id"), col("simhash"), col("chunk"),
         explode(array(masks.map(m => col("v").bitwiseXOR(lit(m))): _*)).as("v"))

@@ -2216,15 +2216,13 @@ object Multimodal {
     * Hamming core and hot-block guard. Returns (`id_a`, `id_b`,
     * `hamming`), `id_a < id_b`. */
   def audioNearDupPairs(hashes: DataFrame, maxHamming: Int = 8,
-      maxBlockSize: Int = 1000, sizeByVolume: Boolean = false): DataFrame = {
+      maxBlockSize: Int = 1000): DataFrame = {
     val sigs = hashes
       .select(col("media_id").as("doc_id"), col("ahash").as("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sizeByVolume defaults OFF here: the shared core's predicted-volume
-    // probe sizing costs one extra action, which re-decodes an in-line
-    // media lineage; pass true when `hashes` is a parquet-backed
-    // signature table (the standing-corpus shape)
-    Dedup.hash64NearDupPairs(sigs, maxHamming, maxBlockSize, sizeByVolume)
+    // sizeByVolume OFF: the shared core's predicted-volume probe sizing
+    // costs one extra action, which re-decodes an in-line media lineage
+    Dedup.hash64NearDupPairs(sigs, maxHamming, maxBlockSize, sizeByVolume = false)
   }
 
   /** Perceptual hashes of an image corpus: (`media_id`, `kind`,
@@ -2246,15 +2244,14 @@ object Multimodal {
     * pHashes of re-encodes/resizes land within a few bits, unrelated
     * images differ by ~25-32. */
   def imageNearDupPairs(hashes: DataFrame, maxHamming: Int = 8,
-      maxBlockSize: Int = 1000, sizeByVolume: Boolean = false): DataFrame = {
+      maxBlockSize: Int = 1000): DataFrame = {
     // persisted for the same reason simhashNearDupPairs persists its
     // signature frame: the core feeds both join sides, and re-deriving
     // this frame from a lazy imagePHashes lineage would re-DECODE the
-    // corpus once per side. sizeByVolume defaults OFF (see
-    // audioNearDupPairs): pass true for parquet-backed signature tables.
+    // corpus once per side. sizeByVolume OFF (see audioNearDupPairs).
     val sigs = hashes
       .select(col("media_id").as("doc_id"), col("phash").as("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.hash64NearDupPairs(sigs, maxHamming, maxBlockSize, sizeByVolume)
+    Dedup.hash64NearDupPairs(sigs, maxHamming, maxBlockSize, sizeByVolume = false)
   }
 }

@@ -143,29 +143,33 @@ object Search {
   // batch vocabulary). A HIGH-RATE QUERY SERVICE is the third regime: the
   // corpus is tokenized ONCE into a persisted index and every probe reads
   // only its own terms' postings — probe cost follows the query vocabulary,
-  // not the corpus. Three append-only parquet tables under `indexDir`:
+  // not the corpus. Two append-only parquet tables under `indexDir`:
   //
   //   postings/  (term, doc_id, dl, tf) — repartitioned BY TERM and sorted
   //              within partitions on (term, doc_id), so a probe's pushed
   //              `term IN (...)` filter skips whole row groups via parquet
   //              min/max stats — the IO path that stays flat as the corpus
   //              grows (plus: one term's postings are contiguous);
-  //   terms/     (term, df) doc-frequency INCREMENTS — probes sum them, so
-  //              appends never rewrite existing rows;
-  //   stats/     (n_docs, total_tokens) corpus-count increments, same idea.
+  //   stats/     (n_docs, total_tokens) corpus-count INCREMENTS — probes
+  //              sum them, so appends never rewrite existing rows.
   //
-  // Scores are corpus-relative (df, avdl), and the probe re-derives both
-  // from the increment sums each run — results over an appended index are
-  // IDENTICAL to a fresh build over the union (SearchSpec proves it).
+  // Document frequency is not stored: a term's df is the number of live
+  // docs holding a postings row for it, and the probe already gathers
+  // exactly those rows for its query terms, so it counts df from the
+  // gather and df can never disagree with the postings. (A `terms/` df
+  // table left by an older layout is never read.) Scores are
+  // corpus-relative (df, avdl), and the probe re-derives both each run —
+  // results over an appended index are IDENTICAL to a fresh build over
+  // the union (SearchSpec proves it).
   //
   // Maintenance contract: single writer, appends at-most-once — when
   // feeding from a stream use [[bm25IndexAppendIdempotent]], which gates
-  // all three table appends on one batch marker at the index root, so a
-  // replayed microbatch is skipped instead of double-counting df/tf. A
-  // crash between the postings append and the terms/stats appends leaves
-  // those docs searchable but df/avdl slightly stale until the append is
+  // both table appends on one batch marker at the index root, so a
+  // replayed microbatch is skipped instead of double-counting tf/stats. A
+  // crash between the postings append and the stats append leaves those
+  // docs searchable but n_docs/avdl slightly stale until the append is
   // repaired — scores drift in the last decimals, data never corrupts; an
-  // atomic three-dir commit is a table format's job (same honesty note as
+  // atomic two-dir commit is a table format's job (same honesty note as
   // the incremental-dedup sink). Appends accumulate files and increment
   // rows; [[bm25IndexMaintain]] folds them back when a dir crosses its
   // file threshold.
@@ -188,11 +192,11 @@ object Search {
       writeIndex(newDocs, indexDir, "append", idCol, textCol)
     }
 
-  /** At-most-once [[bm25IndexAppend]]: the three table appends are gated
-    * on one batch marker at the index ROOT (`Sinks.onceForBatch`),
-    * written only after all three complete — a replayed microbatch
+  /** At-most-once [[bm25IndexAppend]]: the postings and stats appends are
+    * gated on one batch marker at the index ROOT (`Sinks.onceForBatch`),
+    * written only after both complete — a replayed microbatch
     * (Structured Streaming re-runs a failed batch with the SAME id) is
-    * skipped instead of double-counting df/tf. Residual window: a crash
+    * skipped instead of double-counting tf/stats. Residual window: a crash
     * between the first append and the marker write duplicates on replay,
     * the gate's documented window. Returns whether the batch was
     * written. */
@@ -210,21 +214,21 @@ object Search {
     * crawl corpus legally needs. Deleted ids land in a `deletes/`
     * registry at the index root (the probe's anti-join side and this
     * call's replay guard: ids already registered are skipped, so a
-    * replayed delete batch is a no-op, not a double decrement), and the
-    * corpus-relative score inputs are corrected IMMEDIATELY with the
-    * same increment algebra appends use — negative `terms/` df rows and
-    * a negative `stats/` row derived from the victims' own postings.
-    * Probes therefore score the remaining corpus EXACTLY as a fresh
-    * build over it would (SearchSpec asserts bit-equality); the dead
-    * postings rows themselves are masked by the registry until
-    * [[bm25IndexCompact]] physically drops them.
+    * replayed delete batch is a no-op, not a double decrement). The
+    * registry alone corrects df — the probe counts df over the masked
+    * postings — and the corpus-size inputs are corrected IMMEDIATELY with
+    * the same increment algebra appends use: a negative `stats/` row
+    * derived from the victims' own postings. Probes therefore score the
+    * remaining corpus EXACTLY as a fresh build over it would (SearchSpec
+    * asserts bit-equality); the dead postings rows themselves are masked
+    * by the registry until [[bm25IndexCompact]] physically drops them.
     *
-    * Crash window: registry-first means a crash before the decrements
-    * leaves deleted docs invisible but df/avdl slightly stale — scores
-    * drift in the last decimals, data never corrupts (the append crash
-    * window's mirror image). A doc whose indexed text had zero tokens
-    * has no postings to derive its `n_docs` decrement from; its count
-    * lingers in `stats/` as the same drift class.
+    * Crash window: registry-first means a crash before the stats
+    * decrement leaves deleted docs invisible but n_docs/avdl slightly
+    * stale — scores drift in the last decimals, data never corrupts (the
+    * append crash window's mirror image). A doc whose indexed text had
+    * zero tokens has no postings to derive its `n_docs` decrement from;
+    * its count lingers in `stats/` as the same drift class.
     *
     * Returns the number of NEWLY retracted ids. Single-writer contract
     * like every other maintenance verb. */
@@ -243,37 +247,31 @@ object Search {
       val n = fresh.count()
       if (n > 0) {
         fresh.write.mode("append").parquet(delDir)
-        val dead = spark.read.parquet(s"$indexDir/postings")
+        spark.read.parquet(s"$indexDir/postings")
           .join(broadcast(fresh), Seq("doc_id"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          dead.groupBy(col("term"))
-            .agg((-count(lit(1))).as("df"))
-            .write.mode("append").parquet(s"$indexDir/terms")
-          dead.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-            .agg((-count(lit(1))).as("n_docs"),
-              (-coalesce(sum(col("dl")), lit(0L))).as("total_tokens"))
-            .write.mode("append").parquet(s"$indexDir/stats")
-        } finally dead.unpersist()
-        Seq("deletes", "terms", "stats").foreach(d =>
+          .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
+          .agg((-count(lit(1))).as("n_docs"),
+            (-coalesce(sum(col("dl")), lit(0L))).as("total_tokens"))
+          .write.mode("append").parquet(s"$indexDir/stats")
+        Seq("deletes", "stats").foreach(d =>
           spark.catalog.refreshByPath(s"$indexDir/$d"))
       }
       n
     } finally fresh.unpersist()
   }
 
-  /** Fold the index's append debris in place. `terms/` and `stats/`
-    * increment rows collapse to one row per key — probes SUM increments,
-    * so folded probe results are bit-identical (integer sums reassociate
-    * exactly; the double casts happen after summation). `postings/`
-    * re-sorts into term-partitioned, term-sorted files: appends interleave
-    * term runs across ever more files, eroding the row-group skipping the
-    * probe's pushed `term IN` filter relies on — and retracted docs'
-    * rows (already score-neutralized by [[bm25IndexDelete]]'s negative
-    * increments, masked by the registry) are physically dropped here.
-    * The registry itself only folds to distinct ids, never shrinks: it
-    * stays the replay guard, and post-compaction a replayed delete finds
-    * no postings to decrement, so it is naturally a no-op. Each dir
+  /** Fold the index's append debris in place. `stats/` increment rows
+    * collapse to one row — probes SUM increments, so folded probe results
+    * are bit-identical (integer sums reassociate exactly; the double
+    * casts happen after summation). `postings/` re-sorts into
+    * term-partitioned, term-sorted files: appends interleave term runs
+    * across ever more files, eroding the row-group skipping the probe's
+    * pushed `term IN` filter relies on — and retracted docs' rows
+    * (already masked by the registry, their stats decremented by
+    * [[bm25IndexDelete]]) are physically dropped here. The registry
+    * itself only folds to distinct ids, never shrinks: it stays the
+    * replay guard, and post-compaction a replayed delete finds no
+    * postings to decrement, so it is naturally a no-op. Each dir
     * rewrites through `Sinks.rewriteParquetInPlace` (dot-tmp +
     * two-rename swap — same non-atomic window and single-owner contract
     * as compaction; the batch marker lives at the index root, so swaps
@@ -293,9 +291,6 @@ object Search {
         df.join(broadcast(spark.read.parquet(delDir)), Seq("doc_id"), "left_anti")
       else df)
         .repartition(col("term")).sortWithinPartitions(col("term"), col("doc_id")))
-    graft.io.Sinks.rewriteParquetInPlace(spark, s"$indexDir/terms")(df =>
-      df.groupBy(col("term")).agg(sum(col("df")).as("df"))
-        .filter(col("df") > 0))
     graft.io.Sinks.rewriteParquetInPlace(spark, s"$indexDir/stats")(df =>
       df.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("total_tokens")).as("total_tokens")))
@@ -304,14 +299,15 @@ object Search {
   }
 
   /** Threshold maintenance for an append-loop: compact when any of the
-    * three dirs crosses `maxFiles` parquet files (the same bounded-file
-    * contract as `Sinks.writeParquetStreamMaintained`). Returns whether a
-    * compaction ran. */
+    * index's dirs (postings, stats, the delete registry) crosses
+    * `maxFiles` parquet files (the same bounded-file contract as
+    * `Sinks.writeParquetStreamMaintained`). Returns whether a compaction
+    * ran. */
   def bm25IndexMaintain(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, maxFiles: Int = 64): Boolean = {
     require(maxFiles > 0, s"maxFiles must be positive: $maxFiles")
     IndexLock.withLock(spark, indexDir, "maintain") {
-      val over = Seq("postings", "terms", "stats").exists(d =>
+      val over = Seq("postings", "stats", "deletes").exists(d =>
         graft.io.Sinks.parquetFileCount(spark, s"$indexDir/$d") > maxFiles)
       if (over) compactBody(spark, indexDir)
       over
@@ -325,18 +321,13 @@ object Search {
       .withColumn("dl", size(col("toks")).cast(LongType))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val postings = toks
+      toks
         .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
         .groupBy(col("term"), col("doc_id"), col("dl"))
         .agg(count(lit(1)).as("tf"))
-      postings
         .repartition(col("term"))
         .sortWithinPartitions(col("term"), col("doc_id"))
         .write.mode(mode).parquet(s"$indexDir/postings")
-      // df increments ride the SAME term-keyed exchange shape; stats is a
-      // single row per append
-      postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .write.mode(mode).parquet(s"$indexDir/terms")
       toks.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tokens"))
         .write.mode(mode).parquet(s"$indexDir/stats")
     } finally toks.unpersist()
@@ -345,14 +336,15 @@ object Search {
   /** Top-`k` by BM25 from the standing index — the corpus text is never
     * touched: the postings scan carries a pushed `term IN (...)` filter
     * (literal query terms → parquet row-group skipping over the
-    * term-sorted layout), df/avdl come from the KB-scale increment tables,
-    * and the only shuffle is the per-doc gather of the matching postings.
+    * term-sorted layout), avdl comes from the KB-scale stats increments,
+    * df is counted over the gathered postings themselves, and the only
+    * shuffle is the per-doc gather of the matching postings.
     *
     * BIT-PARITY with [[bm25TopK]]: the gather collects each doc's
     * (term → tf) map — an ORDER-FREE aggregation, unlike a double sum —
     * and the score is then the same fixed left-assoc fold over the query
     * terms, with per-term df as single-row broadcast columns (order-free
-    * integer sums over the increment rows). Every operand
+    * integer counts over the gathered docs). Every operand
     * (tf, dl, df, n_docs, avdl) is an exact integer cast to double, so
     * the whole score is the identical IEEE expression tree and the probe
     * is directly oracle-able by the same SQL as the scan-side operator.
@@ -368,16 +360,6 @@ object Search {
       .agg(sum(col("n_docs")).cast(DoubleType).as("n_docs"),
         (sum(col("total_tokens")).cast(DoubleType) /
           sum(col("n_docs")).cast(DoubleType)).as("avdl"))
-    // per-term df pivoted to one row of df0..dfm-1 columns: conditional
-    // integer sums, deterministic whatever the increment-row order. A term
-    // absent from the index yields a null df — harmless, since no postings
-    // row can carry tf > 0 for it.
-    val dfCols = terms.map(i =>
-      sum(when(col("term") === queryTerms(i), col("df")))
-        .cast(DoubleType).as(s"df$i"))
-    val dfRow = spark.read.parquet(s"$indexDir/terms")
-      .filter(col("term").isin(queryTerms: _*))
-      .agg(dfCols.head, dfCols.tail: _*)
     // retracted docs (bm25IndexDelete registry) are masked before the
     // gather — a broadcast anti-join over the term-pruned stream, gone
     // entirely once compaction physically drops their rows
@@ -387,10 +369,22 @@ object Search {
     val live = if (graft.io.Sinks.parquetExists(spark, delDir))
       matched.join(broadcast(spark.read.parquet(delDir)), Seq("doc_id"), "left_anti")
     else matched
+    // dl is constant per doc, so grouping on it too changes no group —
+    // and a grouping key survives column pruning, which keeps the df
+    // aggregate's gather identical to the scorer's: the shuffle is
+    // planned once and reused by both
     val perDoc = live
-      .groupBy(col("doc_id"))
-      .agg(first(col("dl")).cast(DoubleType).as("dl"),
-        map_from_entries(collect_list(struct(col("term"), col("tf")))).as("tfs"))
+      .groupBy(col("doc_id"), col("dl"))
+      .agg(map_from_entries(collect_list(struct(col("term"), col("tf")))).as("tfs"))
+      .withColumn("dl", col("dl").cast(DoubleType))
+    // per-term df pivoted to one row of df0..dfm-1 columns: the live docs
+    // whose gathered map holds the term — an integer count, deterministic
+    // whatever the gather order. A term absent from the index counts 0 —
+    // harmless, since no doc carries tf > 0 for it.
+    val dfCols = terms.map(i =>
+      count(try_element_at(col("tfs"), lit(queryTerms(i))))
+        .cast(DoubleType).as(s"df$i"))
+    val dfRow = perDoc.agg(dfCols.head, dfCols.tail: _*)
     val score = terms.map { i =>
       val tf = coalesce(try_element_at(col("tfs"), lit(queryTerms(i))), lit(0L))
         .cast(DoubleType)

@@ -165,7 +165,7 @@ object ExtensionQueries {
   /** BM25 index memo with a RETRACTION applied: full build, then
     * [[graft.operators.Search.bm25IndexDelete]] of the `doc_id % 7 == 3`
     * slice — the state `q_bm25_after_delete` oracles is the interesting
-    * one (registry mask + negative df/stats increments, BEFORE compaction
+    * one (registry mask + negative stats increment, BEFORE compaction
     * physically drops the rows; compaction invariance is SearchSpec-
     * proven). */
   private val bm25DelIndexes =
@@ -2726,7 +2726,7 @@ object ExtensionQueries {
         Seq("spark", "merge", "window", "stream"), k = 100)),
 
     // retraction under oracle: the standing index with the doc_id%7==3
-    // slice DELETED (registry mask + negative df/stats increments, pre-
+    // slice DELETED (registry mask + negative stats increment, pre-
     // compaction) must score the survivors EXACTLY as DuckDB computes
     // over the remaining corpus — the takedown path is correctness-
     // gated end to end, not just spec'd
@@ -6779,8 +6779,9 @@ object ExtensionQueries {
     // map-gather + fixed-order fold makes its scores bit-identical to the
     // scan-side operator (Search.bm25IndexProbe's parity note).
     // retraction probe: IDENTICAL scoring over the corpus minus the
-    // deleted slice — the registry mask hides the victims' postings and
-    // the negative increments restore exactly this n_docs/df/avdl
+    // deleted slice — the registry mask hides the victims' postings (so
+    // the probe's df counts only survivors) and the negative stats
+    // increment restores exactly this n_docs/avdl
     "q_bm25_after_delete" ->
       s"""WITH tk AS (SELECT doc_id, $tokensSql AS toks FROM documents WHERE doc_id % 7 != 3), d AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, CAST(len(list_filter(toks, x -> x = 'spark')) AS DOUBLE) AS tf0, CAST(len(list_filter(toks, x -> x = 'merge')) AS DOUBLE) AS tf1, CAST(len(list_filter(toks, x -> x = 'window')) AS DOUBLE) AS tf2, CAST(len(list_filter(toks, x -> x = 'stream')) AS DOUBLE) AS tf3 FROM tk), st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs, CAST(SUM(CAST(dl AS BIGINT)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avdl, CAST(SUM(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0, CAST(SUM(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1, CAST(SUM(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2, CAST(SUM(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df3 FROM d), sc AS (SELECT doc_id, CASE WHEN tf0 > 0 THEN ((n_docs - df0 + 0.5) / (df0 + 0.5)) * (tf0 * 2.2) / (tf0 + 1.2 * (0.25 + 0.75 * (dl / avdl))) ELSE 0.0 END + CASE WHEN tf1 > 0 THEN ((n_docs - df1 + 0.5) / (df1 + 0.5)) * (tf1 * 2.2) / (tf1 + 1.2 * (0.25 + 0.75 * (dl / avdl))) ELSE 0.0 END + CASE WHEN tf2 > 0 THEN ((n_docs - df2 + 0.5) / (df2 + 0.5)) * (tf2 * 2.2) / (tf2 + 1.2 * (0.25 + 0.75 * (dl / avdl))) ELSE 0.0 END + CASE WHEN tf3 > 0 THEN ((n_docs - df3 + 0.5) / (df3 + 0.5)) * (tf3 * 2.2) / (tf3 + 1.2 * (0.25 + 0.75 * (dl / avdl))) ELSE 0.0 END AS bm25 FROM d, st) SELECT doc_id, bm25 FROM sc WHERE bm25 > 0 ORDER BY bm25 DESC, doc_id LIMIT 100""",
 

@@ -116,6 +116,39 @@ class SearchSpec extends SparkSpec {
     assert(plan.contains("PushedFilters: [In(term"),
       s"term filter not pushed to the postings scan:\n$plan")
     assert(!plan.toLowerCase.contains("text"), "probe plan touches corpus text")
+    // df is counted from the gathered postings: no df table is read
+    assert(!plan.contains("/terms"), s"probe plan reads a terms table:\n$plan")
+    // the df aggregate and the scorer share one gather shuffle
+    val probe = Search.bm25IndexProbe(spark, dir, Seq("spark", "quantum"), k = 5)
+    probe.collect()
+    val ran = probe.queryExecution.executedPlan.toString
+    assert(ran.contains("ReusedExchange"), s"postings gathered twice:\n$ran")
+    // no maintenance verb writes a terms/ dir either
+    def noTermsDir(step: String): Unit =
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "terms")),
+        s"$step left a terms/ dir")
+    noTermsDir("build")
+    Search.bm25IndexAppend(Seq((7L, "spark quantum appended")).toDF("doc_id", "text"), dir)
+    noTermsDir("append")
+    assert(Search.bm25IndexDelete(spark, dir, Seq(1L).toDF("doc_id")) == 1L)
+    noTermsDir("delete")
+    Search.bm25IndexCompact(spark, dir)
+    noTermsDir("compact")
+  }
+
+  test("standing index: a stray terms/ table does not change probe scores") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_terms").toString
+    Search.bm25BuildIndex(corpus, dir)
+    def probeBits(terms: Seq[String]) =
+      Search.bm25IndexProbe(spark, dir, terms, k = 10).collect()
+        .map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1)))).toSeq
+    val queries = Seq(Seq("spark", "quantum"), Seq("quantum"), Seq("rare"))
+    val clean = queries.map(probeBits)
+    // a (term, df) table with wrong counts, as an older layout would
+    // have left it beside the postings
+    Seq(("spark", 1L), ("quantum", 5L), ("rare", 3L)).toDF("term", "df")
+      .write.parquet(s"$dir/terms")
+    assert(queries.map(probeBits) == clean, "probe read the stray terms/ table")
   }
 
   test("standing index: replayed append batch is skipped — no df/tf double-count") {
@@ -153,7 +186,7 @@ class SearchSpec extends SparkSpec {
       Search.bm25IndexMaintain(spark, dir, maxFiles = 8)
     }
     // bounded: threshold + one batch's burst, never 10 appends' worth
-    for (d <- Seq("postings", "terms", "stats")) {
+    for (d <- Seq("postings", "stats")) {
       val n = graft.io.Sinks.parquetFileCount(spark, s"$dir/$d")
       assert(n <= 8 + 32, s"$d grew unbounded: $n files") // burst ≤ shuffle partitions
     }
@@ -166,12 +199,10 @@ class SearchSpec extends SparkSpec {
     probe.zip(scan).foreach { case ((_, s1), (_, s2)) =>
       assert(math.abs(s1 - s2) < 1e-9)
     }
-    // an explicit compact folds terms to one row per term, stats to one
-    // row — and probe results stay bit-identical (integer increment sums)
+    // an explicit compact folds stats to one row — and probe results
+    // stay bit-identical (integer increment sums)
     Search.bm25IndexCompact(spark, dir)
     assert(spark.read.parquet(s"$dir/stats").count() == 1)
-    val dfRows = spark.read.parquet(s"$dir/terms").groupBy("term").count()
-    assert(dfRows.filter($"count" > 1).count() == 0, "terms not folded")
     val probe2 = Search.bm25IndexProbe(spark, dir, Seq("spark", "quantum"), k = 15)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probe2 == probe, "compaction changed probe results")
