@@ -528,37 +528,26 @@ object CorpusPipeline {
 
   // ---- streaming MEDIA dedup (perceptual hashes) -------------------------
 
-  /** Kinds the perceptual tier can hash. Everything else passes through
-    * the media sink UNDEDUPED (a payload without a pixel/waveform
-    * decoder cannot be perceptually compared; silently hashing its raw
-    * bytes would pair nothing and imply it was deduped). `audio/mpeg`
-    * is hashable PER PAYLOAD: MPEG-1 Layer I decodes to samples and
-    * fingerprints like WAV/FLAC; Layer II/III — whose sample decode the
-    * clean-room build refuses (see [[graft.operators.Mpeg]]) — take the
-    * unhashable pass-through, decided by a header walk, never by an
-    * executor exception. */
-  private val hashableKinds = Set(
-    "image/ppm", "image/png", "image/jpeg", "image/gif",
-    "image/bmp", "image/x-ms-bmp", "image/tiff",
-    "image/x-icon", "image/vnd.microsoft.icon",
-    "audio/wav", "audio/flac", "audio/x-flac",
-    "audio/aiff", "audio/x-aiff",
-    "audio/mpeg", "audio/mp3", "audio/mpeg3", "audio/x-mpeg-3",
-    "video/mp4", "audio/mp4", "audio/x-m4a",
-    "audio/ogg", "application/ogg", "audio/opus", "audio/vorbis",
-    "video/webm", "audio/webm", "video/x-matroska", "audio/x-matroska")
-
   /** Perceptual + identity signatures of a media batch: (`doc_id`,
     * `modality`, `simhash`) — images through
     * [[Multimodal.perceptualHash64]], audio through
-    * [[Multimodal.audioHash64]]. Only [[hashableKinds]] emit rows;
-    * malformed payloads of hashable kinds fail loudly (the codec
-    * contract), EXCEPT audio/mpeg where an unwalkable stream means
-    * framing damage — the documented metadata-only tier — and the
-    * payload falls back to pass-through.
+    * [[Multimodal.audioHash64]]. Only the kinds the `m.kind match`
+    * below names emit rows; everything else passes through the media
+    * sink UNDEDUPED (a payload without a pixel/waveform decoder or a
+    * content-hash walker cannot be compared; silently hashing its raw
+    * bytes would pair nothing and imply it was deduped). Malformed
+    * payloads of hashable kinds fail loudly (the codec contract),
+    * EXCEPT the container and stream kinds (MPEG audio, MP4, Ogg,
+    * Matroska) where an unwalkable stream means framing damage — the
+    * documented metadata-only tier — and the payload falls back to
+    * pass-through.
     *
-    * `audio/mpeg` emits up to TWO rows from ONE frame walk
-    * ([[graft.operators.Mpeg.walkFrames]]):
+    * `audio/mpeg` is hashable PER PAYLOAD: MPEG-1 Layer I decodes to
+    * samples and fingerprints like WAV/FLAC; Layer II/III — whose
+    * sample decode the clean-room build refuses (see
+    * [[graft.operators.Mpeg]]) — keep only the stream identity, decided
+    * by a header walk, never by an executor exception. It emits up to
+    * TWO rows from ONE frame walk ([[graft.operators.Mpeg.walkFrames]]):
     *  - `audio_stream` at EVERY layer: the tag-invariant
     *    [[graft.operators.Mpeg.streamHash64]] over the ID3-stripped
     *    coded stream — a re-tagged MP3 (different ID3, identical
@@ -582,15 +571,15 @@ object CorpusPipeline {
     import spark.implicits._
     batch.select(col("media_id"), col("kind"), col("bytes"))
       .as[Multimodal.Media]
-      .mapPartitions(_.flatMap { m =>
-        if (!hashableKinds.contains(m.kind)) Nil
-        else if (m.kind.startsWith("image/"))
+      .mapPartitions(_.flatMap(m => m.kind match {
+        case "image/ppm" | "image/png" | "image/jpeg" | "image/gif" |
+            "image/bmp" | "image/x-ms-bmp" | "image/tiff" |
+            "image/x-icon" | "image/vnd.microsoft.icon" =>
           Seq((m.media_id, "image", Multimodal.perceptualHash64(m)))
-        else if (m.kind == "audio/wav" || m.kind.contains("flac") ||
-            m.kind == "audio/aiff" || m.kind == "audio/x-aiff")
+        case "audio/wav" | "audio/flac" | "audio/x-flac" |
+            "audio/aiff" | "audio/x-aiff" =>
           Seq((m.media_id, "audio", Multimodal.audioHash64(m)))
-        else if (m.kind == "video/mp4" || m.kind == "audio/mp4" ||
-            m.kind == "audio/x-m4a") {
+        case "video/mp4" | "audio/mp4" | "audio/x-m4a" =>
           // MP4: metadata-invariant mdat content hash ([[Mp4
           // .contentHash64]]) — an edited-metadata copy is an exact dup;
           // malformed containers take the metadata-tier pass-through,
@@ -598,8 +587,7 @@ object CorpusPipeline {
           (try Some(graft.operators.Mp4.contentHash64(m.bytes, m.media_id))
           catch { case _: IllegalArgumentException => None })
             .map(h => (m.media_id, "mp4_stream", h)).toSeq
-        } else if (m.kind == "audio/ogg" || m.kind == "application/ogg" ||
-            m.kind == "audio/opus" || m.kind == "audio/vorbis") {
+        case "audio/ogg" | "application/ogg" | "audio/opus" | "audio/vorbis" =>
           // Ogg: tag- AND page-layout-invariant audio-packet hash
           // ([[graft.operators.Ogg.streamHash64]]) — a re-tagged or
           // re-muxed copy of the same coded audio is an exact dup;
@@ -607,8 +595,8 @@ object CorpusPipeline {
           (try Some(graft.operators.Ogg.streamHash64(m.bytes, m.media_id))
           catch { case _: IllegalArgumentException => None })
             .map(h => (m.media_id, "ogg_stream", h)).toSeq
-        } else if (m.kind == "video/webm" || m.kind == "audio/webm" ||
-            m.kind == "video/x-matroska" || m.kind == "audio/x-matroska") {
+        case "video/webm" | "audio/webm" | "video/x-matroska" |
+            "audio/x-matroska" =>
           // Matroska/WebM: metadata-invariant Cluster content hash
           // ([[graft.operators.Mkv.contentHash64]]) — a retitled or
           // retagged copy of the same media is an exact dup; framing
@@ -616,7 +604,7 @@ object CorpusPipeline {
           (try Some(graft.operators.Mkv.contentHash64(m.bytes, m.media_id))
           catch { case _: IllegalArgumentException => None })
             .map(h => (m.media_id, "mkv_stream", h)).toSeq
-        } else {
+        case "audio/mpeg" | "audio/mp3" | "audio/mpeg3" | "audio/x-mpeg-3" =>
           val walked = // framing damage: metadata tier, pass through
             try Some(graft.operators.Mpeg.walkFrames(m.bytes, m.media_id))
             catch { case _: IllegalArgumentException => None }
@@ -628,8 +616,8 @@ object CorpusPipeline {
                 m, graft.operators.Mpeg.infoOf(m.bytes, fs))))
             else Seq(stream)
           }
-        }
-      })
+        case _ => Nil
+      }))
       .toDF("doc_id", "modality", "simhash")
   }
 
@@ -641,17 +629,16 @@ object CorpusPipeline {
     * new row), deduped within the batch and against the STANDING
     * signature table at Hamming radius `maxHamming`, and the survivors
     * committed atomically through the same MANIFEST-LAST protocol as
-    * the text sink (stage corpus rows, the chunk bucket index —
-    * [[Dedup.hash64BucketTable]], partitioned by modality so probes
-    * prune — and signatures invisibly; flip the corpus marker;
-    * publish): a reader sees a batch everywhere or nowhere, pre-flip
-    * crashes replay to the identical kept-set (a pure function of
-    * (batch, signature table)), post-flip crashes roll forward.
-    * Modalities never cross-match: probing and pairing run per
-    * modality.
+    * the text sink (stage corpus rows, the chunk bucket index
+    * [[Dedup.hash64BucketTable]] and signatures invisibly; flip the
+    * corpus marker; publish): a reader sees a batch everywhere or
+    * nowhere, pre-flip crashes replay to the identical kept-set (a pure
+    * function of (batch, signature table)), post-flip crashes roll
+    * forward. Modalities never cross-match: `modality` is part of the
+    * probe key, so one probe serves every modality.
     *
     * Unhashable kinds pass through to the corpus undeduped (see
-    * [[hashableKinds]]). Single-writer contract. */
+    * [[mediaSigs]]). Single-writer contract. */
   def writeStreamMediaDedup(media: DataFrame, corpusDir: String,
       sigDir: String, checkpointDir: String, maxHamming: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -671,33 +658,24 @@ object CorpusPipeline {
     graft.io.Sinks.commitStaged(spark, corpusDir,
         Seq(corpusDir, bucketDir, sigDir), batchId) {
       val hasTable = graft.io.Sinks.parquetExists(spark, sigDir)
-      if (hasTable) syncBucketIndex(spark, sigDir, bucketDir)(bucketRows)
-      val modalities = Seq("image", "audio", "audio_stream", "mp4_stream",
-        "ogg_stream", "mkv_stream")
+      if (hasTable) syncBucketIndex(spark, sigDir, bucketDir)(Dedup.hash64BucketTable)
       val sigs = mediaSigs(batch).persist()
       try {
         sigs.count() // materialize: exact stats → broadcast probes (see minhashDedupAgainst)
-        // intra-batch twins per modality — same min-id-keeper rule as text
-        val intraLosers = modalities.map(mod =>
-            Dedup.hash64NearDupPairs(sigs.filter(col("modality") === mod),
-              maxHamming, maxBlockSize = 1000,
-              sizeByVolume = false) // microbatch-sized, decode-bound lineage
-              .select(col("id_b").as("doc_id")))
-          .reduce(_ union _).distinct()
+        // a doc is a dup iff ANY of its signatures matches. Intra-batch:
+        // same min-id-keeper rule as text — the min ref includes the
+        // doc's own hamming-0 self-match, so a loser near-dups a
+        // smaller-id batch doc of the same modality
+        val intraLosers =
+          Dedup.hash64DedupAgainst(sigs, Dedup.hash64BucketTable(sigs), maxHamming)
+            .filter(col("dup_of_ref") < col("doc_id")).select("doc_id")
         val keptSigs = sigs.join(intraLosers, Seq("doc_id"), "left_anti")
         val fresh =
           if (!hasTable) keptSigs
-          else modalities.map { mod =>
-            Dedup.hash64DedupAgainst(
-                keptSigs.filter(col("modality") === mod)
-                  .select("doc_id", "simhash"),
-                spark.read.parquet(bucketDir)
-                  .filter(col("modality") === mod)
-                  .select("chunk", "v", "doc_id", "simhash"),
-                maxHamming)
-              .filter(col("is_new")).select("doc_id")
-          }.reduce(_ union _)
-            .join(keptSigs, Seq("doc_id")) // reattach modality + hash
+          else keptSigs.join(
+            Dedup.hash64DedupAgainst(keptSigs, spark.read.parquet(bucketDir), maxHamming)
+              .filter(!col("is_new")).select("doc_id"),
+            Seq("doc_id"), "left_anti")
         // EAGER local checkpoint, not persist: the kept-set's plan reads
         // bucketDir (the standing-index probe), and the commit's own bucket
         // append below invalidates any cache keyed on that path — a
@@ -713,15 +691,9 @@ object CorpusPipeline {
             .join(sigs.select(col("doc_id").as("media_id")), Seq("media_id"), "left_anti"))
         val corpusRows = batch.join(keepIds, Seq("media_id"), "left_semi")
         graft.io.Sinks.stageBatch(corpusRows, corpusDir, batchId)
-        graft.io.Sinks.stageBatch(bucketRows(freshP), bucketDir, batchId)
+        graft.io.Sinks.stageBatch(Dedup.hash64BucketTable(freshP), bucketDir, batchId)
         graft.io.Sinks.stageBatch(freshP, sigDir, batchId)
       } finally sigs.unpersist()
     }
   }
-
-  /** (`chunk`, `v`, `doc_id`, `simhash`, `modality`) bucket rows of a
-    * signature frame. */
-  private def bucketRows(sigs: DataFrame): DataFrame =
-    Dedup.hash64BucketTable(sigs.select("doc_id", "simhash"))
-      .join(sigs.select("doc_id", "modality"), Seq("doc_id"))
 }

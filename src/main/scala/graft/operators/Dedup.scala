@@ -507,10 +507,10 @@ object Dedup {
     // ACTION, which re-executes whatever lineage `sigs` carries:
     // callers whose signatures are cheap to (re)materialize — text
     // SimHash over a cached projection, a parquet-backed signature
-    // table — turn it on; decode-bound in-line media pipelines leave it
-    // off (their production dedup shape is the streaming standing-index
-    // probe, not an all-pairs self-join — measured +1.6 s on the audio
-    // gate from the extra decode pass alone).
+    // table — turn it on; the decode-bound in-line image and audio
+    // pairers (`Multimodal.imageNearDupPairs`/`audioNearDupPairs`) leave
+    // it off (measured +1.6 s on the audio gate from the extra decode
+    // pass alone).
     val candidateInstances =
       if (!sizeByVolume) 0L
       else occupancy
@@ -544,10 +544,10 @@ object Dedup {
     // (the handle dies with this scope while the plan still needs it) —
     // so the CALLER owns the release: batch callers running many corpora
     // per session clearCache between batches (Bench does; one cached agg
-    // per corpus otherwise accumulates for the session lifetime), and
-    // long-lived streaming maintain loops must pass sizeByVolume=false
-    // (the media sink does — its production shape is the standing-index
-    // probe, which never enters this path with a cache)
+    // per corpus otherwise accumulates for the session lifetime), and a
+    // long-lived streaming loop calling this core must pass
+    // sizeByVolume=false (streaming sinks probe through
+    // `hash64DedupAgainst` instead, which caches nothing)
     val width = math.max(shufflePartitions(sigs),
       math.min(16384L, candidateInstances / 1000000L + 1).toInt)
     val repartitioned = keptChunks.repartition(width)
@@ -571,28 +571,41 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** Bucket index over a (`doc_id`, `simhash`) signature frame for
-    * batch-vs-reference Hamming probing: one row per 16-bit chunk value
-    * — (`chunk`, `v`, `doc_id`, `simhash`), the persisted artifact an
-    * incremental media-dedup stream maintains (the 64-bit analogue of
-    * [[minhashBucketTable]]). Multi-index hashing (Norouzi et al. 2012):
-    * any two hashes within Hamming distance h agree exactly on some
-    * chunk after at most ⌊h/4⌋ bit flips, so probing 4 chunk tables with
-    * a flip budget finds every neighbor. */
+  /** Bucket index over a (`doc_id`, `modality`, `simhash`) signature
+    * frame for batch-vs-reference Hamming probing: one row per 16-bit
+    * chunk value — (`modality`, `chunk`, `v`, `doc_id`, `simhash`), the
+    * persisted artifact an incremental media-dedup stream maintains (the
+    * 64-bit analogue of [[minhashBucketTable]]). `modality` leads the
+    * key, so signatures of different modalities never share a bucket.
+    * Multi-index hashing (Norouzi et al. 2012): any two hashes within
+    * Hamming distance h agree exactly on some chunk after at most
+    * ⌊h/4⌋ bit flips, so probing 4 chunk tables with a flip budget finds
+    * every neighbor. */
   def hash64BucketTable(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"), col("simhash"),
+    sigs.select(col("doc_id"), col("modality"), col("simhash"),
         explode(array((0 until 4).map { c =>
           struct(lit(c).as("chunk"),
             shiftright(col("simhash"), c * 16).bitwiseAND(lit(0xffffL)).as("v"))
         }: _*)).as("cb"))
-      .select(col("cb.chunk").as("chunk"), col("cb.v").as("v"),
+      .select(col("modality"), col("cb.chunk").as("chunk"), col("cb.v").as("v"),
         col("doc_id"), col("simhash"))
+
+  /** Hot-bucket cap of [[hash64DedupAgainst]]: a reference
+    * (`modality`, `chunk`, `v`) bucket holding more rows is dropped from
+    * candidate generation (with 16-bit chunks a billion-row index
+    * averages thousands per bucket — the cap bounds the pathological
+    * ones; documented recall tradeoff, same contract as the pairing
+    * core's hot-block guard). */
+  private val Hash64MaxBucketSize = 100000
 
   /** Batch-vs-reference Hamming dedup over 64-bit signatures — the
     * incremental face of [[hash64NearDupPairs]], mirroring
-    * [[minhashDedupAgainst]]'s contract: a bounded batch probes the
-    * STANDING [[hash64BucketTable]] index (today's media against
-    * everything kept), O(batch × bucket occupancy), never pairs².
+    * [[minhashDedupAgainst]]'s contract: a bounded batch of (`doc_id`,
+    * `modality`, `simhash`) signatures probes the STANDING
+    * [[hash64BucketTable]] index (today's media against everything
+    * kept), O(batch × bucket occupancy), never pairs². The join key is
+    * (`modality`, `chunk`, `v`), so every modality is probed in the one
+    * join and no signature ever matches one of another modality.
     *
     * The batch side explodes each signature's 4 chunks through the
     * ≤ ⌊maxHamming/4⌋ bit-flip mask set and is broadcast BY HINT (the
@@ -600,43 +613,40 @@ object Dedup {
     * minhash probe); the reference index only ever streams through its
     * column-pruned scan. Exact `bit_count` verify on the joined row.
     *
-    * `maxBucketSize` drops over-cap REFERENCE buckets from candidate
-    * generation (with 16-bit chunks a billion-row index averages
-    * thousands per bucket — the cap bounds the pathological ones;
-    * documented recall tradeoff, same contract as the pairing core's
-    * hot-block guard).
+    * Over-cap REFERENCE buckets ([[Hash64MaxBucketSize]]) are dropped
+    * from candidate generation.
     *
-    * Returns one row per batch id: (`doc_id`, `dup_of_ref` = min
-    * matching ref id or null, `hamming` of that match or null,
-    * `is_new`). */
+    * Returns one row per (`doc_id`, `modality`): (`doc_id`, `modality`,
+    * `dup_of_ref` = min matching ref id or null, `hamming` of that
+    * match or null, `is_new`). */
   def hash64DedupAgainst(batchSigs: DataFrame, refBuckets: DataFrame,
-      maxHamming: Int = 8, maxBucketSize: Int = 100000): DataFrame = {
+      maxHamming: Int = 8): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming out of range [0, 15]: $maxHamming")
-    require(maxBucketSize > 0, s"maxBucketSize must be positive: $maxBucketSize")
     val budget = maxHamming / 4
     val masks: Seq[Long] = (0 to budget).flatMap(k =>
       (0 until 16).combinations(k).map(_.foldLeft(0L)((m, b) => m | (1L << b))))
-    val hot = refBuckets.groupBy(col("chunk"), col("v"))
+    val hot = refBuckets.groupBy(col("modality"), col("chunk"), col("v"))
       .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketSize)
-      .select("chunk", "v")
-    val kept = refBuckets.join(hot, Seq("chunk", "v"), "left_anti")
-    val probe = hash64BucketTable(batchSigs.select("doc_id", "simhash"))
-      .select(col("doc_id"), col("simhash"), col("chunk"),
+      .filter(col("__n") > Hash64MaxBucketSize)
+      .select("modality", "chunk", "v")
+    val kept = refBuckets.join(hot, Seq("modality", "chunk", "v"), "left_anti")
+    val probe = hash64BucketTable(batchSigs)
+      .select(col("doc_id"), col("modality"), col("simhash"), col("chunk"),
         explode(array(masks.map(m => col("v").bitwiseXOR(lit(m))): _*)).as("v"))
     val matches = kept.as("o")
-      .join(broadcast(probe).as("n"),
+      .join(broadcast(probe).as("n"), col("n.modality") === col("o.modality") &&
         col("n.chunk") === col("o.chunk") && col("n.v") === col("o.v"))
-      .select(col("n.doc_id").as("doc_id"), col("o.doc_id").as("ref_id"),
+      .select(col("n.doc_id").as("doc_id"), col("n.modality").as("modality"),
+        col("o.doc_id").as("ref_id"),
         bit_count(col("n.simhash").bitwiseXOR(col("o.simhash"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .groupBy(col("doc_id"))
+      .groupBy(col("doc_id"), col("modality"))
       .agg(min(struct(col("ref_id"), col("hamming"))).as("m"))
-      .select(col("doc_id"), col("m.ref_id").as("dup_of_ref"),
+      .select(col("doc_id"), col("modality"), col("m.ref_id").as("dup_of_ref"),
         col("m.hamming").as("hamming"))
-    batchSigs.select(col("doc_id"))
-      .join(matches, Seq("doc_id"), "left")
+    batchSigs.select(col("doc_id"), col("modality"))
+      .join(matches, Seq("doc_id", "modality"), "left")
       .withColumn("is_new", col("dup_of_ref").isNull)
   }
 

@@ -2318,9 +2318,7 @@ object ExtensionQueries {
           .select(col("media_id").as("doc_id"), lit("audio").as("modality"),
             col("ahash").as("simhash")))
       baseSigs.write.mode("overwrite").parquet(sigs)
-      val sigsDf = s.read.parquet(sigs)
-      Dedup.hash64BucketTable(sigsDf.select("doc_id", "simhash"))
-        .join(sigsDf.select("doc_id", "modality"), Seq("doc_id"))
+      Dedup.hash64BucketTable(s.read.parquet(sigs))
         .write.mode("overwrite").parquet(bkts)
       (sigs, bkts)
     })
@@ -4838,15 +4836,7 @@ object ExtensionQueries {
     // twin suppression and fresh-content admission per modality.
     "q_media_dedup" -> ((s, dir) => {
       val (_, bkts) = mediaRef(s, dir)
-      val batch = mediaProbeBatch(s, dir)
-      Seq("image", "audio").map { mod =>
-        Dedup.hash64DedupAgainst(
-            batch.filter(col("modality") === mod).select("doc_id", "simhash"),
-            s.read.parquet(bkts).filter(col("modality") === mod)
-              .select("chunk", "v", "doc_id", "simhash"))
-          .withColumn("modality", lit(mod))
-      }.reduce(_ unionByName _)
-        .select("doc_id", "modality", "dup_of_ref", "hamming", "is_new")
+      Dedup.hash64DedupAgainst(mediaProbeBatch(s, dir), s.read.parquet(bkts))
         .orderBy("doc_id")
     }),
 
@@ -4855,15 +4845,8 @@ object ExtensionQueries {
     // violations are rows, oracle = empty set
     "q_check_media_dedup" -> ((s, dir) => {
       val (_, bkts) = mediaRef(s, dir)
-      val batch = mediaProbeBatch(s, dir)
-      val res = Seq("image", "audio").map { mod =>
-        Dedup.hash64DedupAgainst(
-            batch.filter(col("modality") === mod).select("doc_id", "simhash"),
-            s.read.parquet(bkts).filter(col("modality") === mod)
-              .select("chunk", "v", "doc_id", "simhash"))
-          .withColumn("modality", lit(mod))
-      }.reduce(_ unionByName _)
-      res.filter(
+      Dedup.hash64DedupAgainst(mediaProbeBatch(s, dir), s.read.parquet(bkts))
+        .filter(
           (col("doc_id") < 2000000L && col("is_new")) ||          // twin admitted
           (col("doc_id") >= 2000000L && !col("is_new")))          // fresh suppressed
         .select(

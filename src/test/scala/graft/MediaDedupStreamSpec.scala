@@ -238,5 +238,25 @@ class MediaDedupStreamSpec extends SparkSpec {
       "decodable Layer I carries both the fingerprint and the stream identity")
     assert(sigRows(3L) == Set("audio_stream") && sigRows(5L) == Set("audio_stream"),
       "Layer III enters the signature tier with the stream identity alone")
+    // cross-batch: the re-levelled twin arrives later (a NEW stream hash,
+    // a matching fingerprint) beside a distinct Layer I tone
+    val l1other = TestMp3.layer1(32000, 1, pcm(1320.0).toArray, nb = 13)
+    CorpusPipeline.mediaCommit(Seq(
+      Media(6L, "audio/mpeg", l1b),     // matches l1a's fingerprint: a dup
+      Media(7L, "audio/mpeg", l1other)  // new in both modalities: kept
+    ).toDF(), 1L, corpus, sigs, maxHamming = 8)
+    assert(corpusIds(corpus) == Set(1L, 3L, 5L, 7L),
+      "a doc is a dup iff ANY of its signatures matches the standing table")
+    // one signature row per (doc_id, modality); exactly the 4 chunk rows
+    // of each signature row in the bucket index, labelled with its own
+    // modality
+    val sigTable = spark.read.parquet(sigs)
+      .select("doc_id", "modality", "simhash").as[(Long, String, Long)].collect()
+    assert(sigTable.length == sigTable.map(r => (r._1, r._2)).distinct.length)
+    assert(sigTable.length == 6)
+    val bucketSigs = spark.read.parquet(sigs + ".buckets")
+      .select("doc_id", "modality", "simhash").as[(Long, String, Long)].collect()
+    assert(bucketSigs.groupBy(identity).view.mapValues(_.length).toMap ==
+      sigTable.map(_ -> 4).toMap)
   }
 }
