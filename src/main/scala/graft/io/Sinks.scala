@@ -124,7 +124,8 @@ object Sinks {
     val marker = markerPath(dir)
     if (fs.exists(marker))
       scala.util.Try(readUtf8(fs, marker).trim.toLong).getOrElse {
-        Console.err.println(s"graft: unparseable batch marker $marker — treating as -1")
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"unparseable batch marker $marker — treating as -1")
         -1L
       }
     else -1L

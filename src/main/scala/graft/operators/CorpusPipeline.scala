@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.functions.{TextFunctions => TF}
 
@@ -158,7 +158,11 @@ object CorpusPipeline {
     * shuffles, exact verify on the rare candidates); the benchmark
     * side of decontamination broadcasts (eval-scale by contract).
     * The cache releases with the session (the one-shot flow's
-    * lifetime) or the caller's `clearCache`.
+    * lifetime) or the caller's `clearCache`. The loser and flagged id
+    * sets are EAGER `localCheckpoint`s: executor-local blocks with
+    * truncated lineage, so the returned frame cannot be recovered after
+    * an executor that holds them is lost — on a real cluster, write the
+    * output before relying on it twice, or re-run the flow.
     * Feed the survivors to [[graft.operators.BpeTokenizer]] +
     * [[graft.operators.TokenShards.writeTokenShards]] for the binary
     * training artifact (the `curate-e2e` CLI verb does exactly that).
@@ -289,17 +293,19 @@ object CorpusPipeline {
     * so no batch ever re-tokenizes the accumulated corpus (the signature
     * table itself is text-order-sized: its shingle-hash arrays feed the
     * exact verify — see minhashSignatureTable's storage note). Twins
-    * WITHIN one microbatch are deduped first (greedy min-keeper — see
-    * indexedCommit), so the first batch (no table yet) is also internally
-    * deduped rather than passing wholesale.
+    * WITHIN one microbatch are caught by the same probe (greedy min-id
+    * keeper — see indexedCommit), so the first batch (no table yet) is
+    * also internally deduped rather than passing wholesale.
     *
-    * The PROBE is index-shaped: a (doc_id, band, bucket) bucket table
-    * ([[Dedup.minhashBucketTable]]) is maintained at `sigDir + ".buckets"`
-    * and each batch joins its own buckets against the PRE-BUILT index
-    * instead of re-exploding the whole signature table — per-batch cost
-    * is O(batch + matching buckets + one signature-table verify probe),
-    * not O(corpus bands). A signature table that predates the index (or
-    * lost it) is backfilled once, inside the commit, before the probe.
+    * The PROBE is index-shaped and runs ONCE per batch: a (doc_id, band,
+    * bucket) bucket table ([[Dedup.minhashBucketTable]]) is maintained at
+    * `sigDir + ".buckets"`, and each batch joins its own buckets against
+    * the PRE-BUILT index ∪ its own buckets instead of re-exploding the
+    * whole signature table — per-batch cost is O(batch + matching buckets
+    * + one signature-table verify probe), not O(corpus bands). A
+    * signature table that predates the index (or lost it) is backfilled
+    * once, inside the commit, before the probe. The commit shares its
+    * kept-set skeleton with [[writeStreamMediaDedup]].
     *
     * Atomicity — the MANIFEST-LAST commit ([[graft.io.Sinks
     * .commitStaged]], which carries the replay and crash proof): every
@@ -311,7 +317,7 @@ object CorpusPipeline {
     * of committed docs could slip past the probe. The kept-set is a
     * pure function of the batch and the standing table, so a pre-flip
     * replay recomputes it identically. Single-writer contract. Every
-    * batch's caches (batch signatures, the fresh survivors) are
+    * batch's caches (the batch, the kept rows and their signatures) are
     * unpersisted when the commit ends — a long-running query holds no
     * growing cache.
     *
@@ -376,73 +382,86 @@ object CorpusPipeline {
 
   /** One sink commit — shared by [[writeStreamIncrementalDedup]]
     * (indexDir = None) and [[writeStreamIndexed]]; package-visible so the
-    * spec can drive replay and mid-sequence-crash scenarios directly. */
+    * spec can drive replay and mid-sequence-crash scenarios directly.
+    * The kept-set is ONE probe ([[Dedup.minhashMatches]]) of the batch's
+    * signatures against the standing table ∪ the batch itself: a doc is
+    * dropped iff it near-dups any standing doc or a smaller-id doc of
+    * its own batch — the greedy min-id keeper, so the first batch (no
+    * table yet) is internally deduped too. Chains (A~B~C, A≁C) drop C
+    * though its witness B was itself dropped — the over-dropping a CC
+    * keeper also applies. The BM25 append rides its own marker and lands
+    * before the flip. */
   private[graft] def indexedCommit(batch: DataFrame, batchId: Long,
       corpusDir: String, sigDir: String, indexDir: Option[String],
       idCol: String, textCol: String,
       k: Int, bands: Int, shingleN: Int, minJaccard: Double,
-      maxIndexFiles: Int): Unit = {
+      maxIndexFiles: Int): Unit =
+    dedupCommit(batch, batchId, corpusDir, sigDir, idCol,
+        Dedup.minhashSignatureTable(_, idCol, textCol, k, shingleN),
+        Dedup.minhashBucketTable(_, k, bands),
+        Dedup.minhashMatches(_, _, _, k, bands, minJaccard)) { kept =>
+      indexDir.foreach { idx =>
+        if (Search.bm25IndexAppendIdempotent(kept, idx, batchId, idCol, textCol))
+          Search.bm25IndexMaintain(batch.sparkSession, idx, maxIndexFiles)
+      }
+    }
+
+  /** The kept-set commit both dedup sinks share, inside the
+    * manifest-last [[graft.io.Sinks.commitStaged]]: bring the bucket
+    * index level with the signature table ([[syncBucketIndex]]), sign the
+    * batch, run ONE probe, then stage the kept corpus rows, their bucket
+    * rows and their signatures.
+    *
+    * The probe `dups(batchSigs, refSigs, refBuckets)` returns the
+    * `doc_id`s to drop. Its reference rows are the standing tables'
+    * (`standing = true`, read with the batch frames' own schemas) ∪ the
+    * batch's own (`standing = false`), so one probe serves both the
+    * standing and the intra-batch dedup. A batch row with no signature
+    * is never dropped (the media sink's unhashable pass-through).
+    *
+    * The batch, its signatures, the kept rows and their signatures are
+    * persisted for the commit and released at its end — a long-running query holds no
+    * growing cache. Staged writes land in `<dir>/.staged-<id>`, which no
+    * cached plan of the standing dirs is rooted at, so no write of the
+    * commit re-caches the kept-set (a recomputed kept-set would probe
+    * the commit's own rows and drop every one of them). `sideWrite` gets the kept corpus rows
+    * after staging, before the flip. */
+  private def dedupCommit(batch: DataFrame, batchId: Long,
+      corpusDir: String, sigDir: String, idCol: String,
+      signatures: DataFrame => DataFrame, buckets: DataFrame => DataFrame,
+      dups: (DataFrame, DataFrame, DataFrame) => DataFrame)(
+      sideWrite: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
     val bucketDir = sigDir + ".buckets"
     graft.io.Sinks.commitStaged(spark, corpusDir,
         Seq(corpusDir, bucketDir, sigDir), batchId) {
       val hasTable = graft.io.Sinks.parquetExists(spark, sigDir)
       if (hasTable)
-        syncBucketIndex(spark, sigDir, bucketDir)(
-          Dedup.minhashBucketTable(_, k, bands))
-      // the kept-set reads the batch in several jobs (signatures, the
-      // intra-batch anti-join, the standing probe); one cached copy keeps
-      // each from re-running the batch's lineage — a WARC decode is a
-      // 21-face union, about 2 min a commit when re-run per job
-      val batchP = batch.persist()
-      val batchSigs = Dedup
-        .minhashSignatureTable(batchP, idCol, textCol, k, shingleN)
-        .persist()
-      // INTRA-batch twins first: the corpus probe only sees the STANDING
-      // table, so near-identical docs arriving in the SAME microbatch would
-      // all pass it (and the first batch ever passed wholesale). Greedy
-      // min-keeper inside the batch — drop a doc iff it near-dups a
-      // smaller-id batch doc, the same rule as the probe's min(ref_id).
-      // Chains (A~B~C, A≁C) drop C though its witness B was itself dropped —
-      // the over-dropping a CC keeper also applies. Pure function of the
-      // batch, so a crash replay recomputes the identical kept-set;
-      // batch-sized work under the microbatch contract.
-      val intraLosers = Dedup.minhashNearDupPairs(batchP, idCol, textCol,
-          k, bands, shingleN, minJaccard, sigs = Some(batchSigs))
-        .select(col("id_b").as(idCol)).distinct()
-      val batchKept = batchP.join(intraLosers, Seq(idCol), "left_anti")
-      val fresh =
-        if (!hasTable) batchKept
-        // batchSigs is a superset of batchKept's signatures (it still
-        // carries the intra-batch losers) — harmless: extra candidates,
-        // and the output joins back to batchKept's rows only
-        else Dedup.minhashDedupAgainst(batchKept, spark.read.parquet(sigDir),
-            idCol, textCol, k, bands, shingleN, minJaccard,
-            batchSigs = Some(batchSigs),
-            refBuckets = Some(spark.read.parquet(bucketDir)))
-          .filter(col("is_new")).drop("dup_of_ref", "is_new")
-      val freshP = fresh.persist()
-      val freshSigs = batchSigs.join(
-        freshP.select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
-        .persist()
-      // every standing-table read above sees the pre-batch state; the
-      // BM25 append rides its own marker and lands before the flip
-      try {
-        graft.io.Sinks.stageBatch(freshP, corpusDir, batchId)
-        graft.io.Sinks.stageBatch(
-          Dedup.minhashBucketTable(freshSigs, k, bands), bucketDir, batchId)
-        graft.io.Sinks.stageBatch(freshSigs, sigDir, batchId)
-        indexDir.foreach { idx =>
-          if (graft.operators.Search.bm25IndexAppendIdempotent(
-              freshP, idx, batchId, idCol, textCol))
-            graft.operators.Search.bm25IndexMaintain(spark, idx, maxIndexFiles)
-        }
-      } finally {
-        freshSigs.unpersist()
-        freshP.unpersist()
-        batchSigs.unpersist()
-        batchP.unpersist()
+        syncBucketIndex(spark, sigDir, bucketDir, signatures(batch).schema)(buckets)
+      def reference(own: DataFrame, dir: String): DataFrame = {
+        val batchRows = own.withColumn("standing", lit(false))
+        if (!hasTable) batchRows
+        else spark.read.schema(own.schema).parquet(dir)
+          .withColumn("standing", lit(true)).union(batchRows)
       }
+      // the kept-set reads the batch in several jobs; one cached copy
+      // keeps each from re-running the batch's lineage — a WARC decode is
+      // a 21-face union, about 2 min a commit when re-run per job. The
+      // kept rows and their signatures are cached too: each feeds more
+      // than one write, and re-deriving them per write re-runs a join
+      val batchP = batch.persist()
+      val sigs = signatures(batchP).persist()
+      val kept = batchP.join(
+        dups(sigs, reference(sigs, sigDir), reference(buckets(sigs), bucketDir))
+          .select(col("doc_id").as(idCol)), Seq(idCol), "left_anti").persist()
+      val keptSigs = sigs.join(kept.select(col(idCol).as("doc_id")),
+        Seq("doc_id"), "left_semi").persist()
+      try {
+        graft.io.Sinks.stageBatch(kept, corpusDir, batchId)
+        graft.io.Sinks.stageBatch(buckets(keptSigs), bucketDir, batchId)
+        graft.io.Sinks.stageBatch(keptSigs, sigDir, batchId)
+        sideWrite(kept)
+      } finally Seq(keptSigs, kept, sigs, batchP).foreach(_.unpersist())
     }
   }
 
@@ -450,21 +469,24 @@ object CorpusPipeline {
     * table at `sigDir` before a probe reads it: a table that predates
     * its index (or lost it) is backfilled whole, and sig rows the index
     * is missing (a partial divergence) are appended. `buckets` maps
-    * signature rows to the sink's bucket rows. */
+    * signature rows to the sink's bucket rows; both tables are read with
+    * declared schemas — `sigSchema` and the bucket rows' own. */
   private def syncBucketIndex(spark: SparkSession, sigDir: String,
-      bucketDir: String)(buckets: DataFrame => DataFrame): Unit =
+      bucketDir: String, sigSchema: StructType)(
+      buckets: DataFrame => DataFrame): Unit = {
+    val sigRows = spark.read.schema(sigSchema).parquet(sigDir)
     if (!graft.io.Sinks.parquetExists(spark, bucketDir))
-      buckets(spark.read.parquet(sigDir))
-        .write.mode("overwrite").parquet(bucketDir)
+      buckets(sigRows).write.mode("overwrite").parquet(bucketDir)
     else {
-      val unindexed = spark.read.parquet(sigDir)
-        .join(spark.read.parquet(bucketDir).select("doc_id").distinct(),
-          Seq("doc_id"), "left_anti")
+      val unindexed = sigRows
+        .join(spark.read.schema(buckets(sigRows).schema).parquet(bucketDir)
+          .select("doc_id").distinct(), Seq("doc_id"), "left_anti")
       if (!unindexed.isEmpty) {
         buckets(unindexed).write.mode("append").parquet(bucketDir)
         spark.catalog.refreshByPath(bucketDir)
       }
     }
+  }
 
   /** Retract documents from every standing artifact the sinks maintain —
     * the takedown path (the legal reality of crawl corpora). Deleted ids
@@ -626,10 +648,11 @@ object CorpusPipeline {
     * (`media_id`, `kind`, `bytes`) rows is hashed (DCT pHash for
     * images, spectrogram fingerprint for audio — so a re-encoded,
     * re-levelled, or resized copy of already-kept media is a DUP, not a
-    * new row), deduped within the batch and against the STANDING
-    * signature table at Hamming radius `maxHamming`, and the survivors
-    * committed atomically through the same MANIFEST-LAST protocol as
-    * the text sink (stage corpus rows, the chunk bucket index
+    * new row), deduped by ONE probe at Hamming radius `maxHamming`
+    * against the STANDING chunk index ∪ the batch's own signatures
+    * (a smaller-id batch twin also drops a doc), and the survivors
+    * committed atomically through the text sink's kept-set skeleton and
+    * MANIFEST-LAST protocol (stage corpus rows, the chunk bucket index
     * [[Dedup.hash64BucketTable]] and signatures invisibly; flip the
     * corpus marker; publish): a reader sees a batch everywhere or
     * nowhere, pre-flip crashes replay to the identical kept-set (a pure
@@ -650,50 +673,14 @@ object CorpusPipeline {
       .start()
 
   /** One media-sink commit — package-visible so the spec drives replay,
-    * divergence-repair, and cross-modality scenarios directly. */
+    * divergence-repair, and cross-modality scenarios directly. ONE
+    * probe ([[Dedup.hash64Matches]]) of the batch's signatures against
+    * the standing index ∪ the batch's own buckets: a doc is a dup iff
+    * ANY of its signatures matches a standing signature or one of a
+    * smaller-id batch doc, of the same modality. */
   private[graft] def mediaCommit(batch: DataFrame, batchId: Long,
-      corpusDir: String, sigDir: String, maxHamming: Int): Unit = {
-    val spark = batch.sparkSession
-    val bucketDir = sigDir + ".buckets"
-    graft.io.Sinks.commitStaged(spark, corpusDir,
-        Seq(corpusDir, bucketDir, sigDir), batchId) {
-      val hasTable = graft.io.Sinks.parquetExists(spark, sigDir)
-      if (hasTable) syncBucketIndex(spark, sigDir, bucketDir)(Dedup.hash64BucketTable)
-      val sigs = mediaSigs(batch).persist()
-      try {
-        sigs.count() // materialize: exact stats → broadcast probes (see minhashDedupAgainst)
-        // a doc is a dup iff ANY of its signatures matches. Intra-batch:
-        // same min-id-keeper rule as text — the min ref includes the
-        // doc's own hamming-0 self-match, so a loser near-dups a
-        // smaller-id batch doc of the same modality
-        val intraLosers =
-          Dedup.hash64DedupAgainst(sigs, Dedup.hash64BucketTable(sigs), maxHamming)
-            .filter(col("dup_of_ref") < col("doc_id")).select("doc_id")
-        val keptSigs = sigs.join(intraLosers, Seq("doc_id"), "left_anti")
-        val fresh =
-          if (!hasTable) keptSigs
-          else keptSigs.join(
-            Dedup.hash64DedupAgainst(keptSigs, spark.read.parquet(bucketDir), maxHamming)
-              .filter(!col("is_new")).select("doc_id"),
-            Seq("doc_id"), "left_anti")
-        // EAGER local checkpoint, not persist: the kept-set's plan reads
-        // bucketDir (the standing-index probe), and the commit's own bucket
-        // append below invalidates any cache keyed on that path — a
-        // persisted `fresh` would silently RECOMPUTE at the signature
-        // append, probe its own just-appended buckets, classify every fresh
-        // row as a dup of itself, and append an empty signature batch
-        // (observed exactly so). The checkpoint pins the kept-set before
-        // any directory is touched.
-        val freshP = fresh.localCheckpoint(true)
-        // corpus rows: fresh hashable media + every unhashable pass-through
-        val keepIds = freshP.select(col("doc_id").as("media_id"))
-          .union(batch.select(col("media_id"))
-            .join(sigs.select(col("doc_id").as("media_id")), Seq("media_id"), "left_anti"))
-        val corpusRows = batch.join(keepIds, Seq("media_id"), "left_semi")
-        graft.io.Sinks.stageBatch(corpusRows, corpusDir, batchId)
-        graft.io.Sinks.stageBatch(Dedup.hash64BucketTable(freshP), bucketDir, batchId)
-        graft.io.Sinks.stageBatch(freshP, sigDir, batchId)
-      } finally sigs.unpersist()
-    }
-  }
+      corpusDir: String, sigDir: String, maxHamming: Int): Unit =
+    dedupCommit(batch, batchId, corpusDir, sigDir, "media_id",
+        mediaSigs, Dedup.hash64BucketTable,
+        (sigs, _, buckets) => Dedup.hash64Matches(sigs, buckets, maxHamming))(_ => ())
 }

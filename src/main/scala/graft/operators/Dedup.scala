@@ -190,9 +190,8 @@ object Dedup {
     * the returned frame is consumed — callers running many corpora per
     * session should spark.catalog.clearCache() between batches (Bench does).
     * `sigs`: pass a pre-computed (and pre-persisted/materialized)
-    * [[minhashSignatureTable]] and the caller owns its cache lifecycle —
-    * same contract as `minhashDedupAgainst`'s `batchSigs`; (k, bands,
-    * shingleN) must match the table's build parameters.
+    * [[minhashSignatureTable]] and the caller owns its cache lifecycle;
+    * (k, bands, shingleN) must match the table's build parameters.
     */
   def minhashNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
@@ -228,8 +227,8 @@ object Dedup {
     // one re-aggregates the full band stream (measured: 5 redundant
     // occupancy shuffles at 50×). With salting off there is a single
     // consumer, and an unconditional persist would LEAK one cached frame
-    // per microbatch in the streaming sinks (which call this for
-    // intra-batch dedup and cannot clearCache mid-stream).
+    // per call in any caller that runs it repeatedly in one session and
+    // cannot clearCache between calls (a per-batch loop).
     val bucketCountsRaw = bucketed.groupBy(col("bkey")).agg(count(lit(1)).as("n"))
     val bucketCounts =
       if (saltBucketSize == 0) bucketCountsRaw
@@ -327,36 +326,50 @@ object Dedup {
     * reference side skips its per-batch band explode entirely — the probe
     * reads the pre-built (band, bucket) rows, so per-batch cost stops
     * growing with corpus lifetime (the explode otherwise re-runs over the
-    * whole accumulated table each batch). `batchSigs`: pass a
-    * pre-computed (and pre-persisted) [[minhashSignatureTable]] of the
-    * batch and the caller owns its cache lifecycle — the right call from
-    * per-microbatch loops, where the internal persist taken when this is
-    * None would otherwise accumulate cached blocks for the session
-    * (`writeStreamIncrementalDedup` does exactly this and unpersists at
-    * the end of each commit). */
+    * whole accumulated table each batch). The batch's signature table is
+    * persisted internally and stays cached for the session. */
   def minhashDedupAgainst(
       batch: DataFrame, refSigs: DataFrame, idCol: String, textCol: String,
       k: Int = 64, bands: Int = 16, shingleN: Int = 3,
       minJaccard: Double = 0.8,
-      batchSigs: Option[DataFrame] = None,
       refBuckets: Option[DataFrame] = None): DataFrame = {
     require(bands > 0 && k % bands == 0,
       s"signature length k=$k must be a positive multiple of bands=$bands")
-    val b = batchSigs.getOrElse {
-      val sigs = minhashSignatureTable(batch, idCol, textCol, k, shingleN)
-        .persist(StorageLevel.MEMORY_AND_DISK) // buckets + verify probe
-      // materialize the cache NOW: with exact InMemoryRelation stats the
-      // planner picks a broadcast hash join for the candidates probe with
-      // the batch side as build — the REFERENCE bucket index then streams
-      // through its scan with NO exchange, which is the whole point of a
-      // persisted index (an unmaterialized cache estimates from the base
-      // scan, plans a sort-merge join, and shuffles the index every
-      // batch — measured 230 MB/batch at ScaleBench 50×). Callers passing
-      // batchSigs own this materialization (the streaming sink's persist
-      // is materialized by its first consumer inside the same commit).
-      sigs.count()
-      sigs
-    }
+    val b = minhashSignatureTable(batch, idCol, textCol, k, shingleN)
+      .persist(StorageLevel.MEMORY_AND_DISK) // buckets + verify probe
+    // materialize the cache NOW: with exact InMemoryRelation stats the
+    // planner picks a broadcast hash join for the candidates probe with
+    // the batch side as build — the REFERENCE bucket index then streams
+    // through its scan with NO exchange, which is the whole point of a
+    // persisted index (an unmaterialized cache estimates from the base
+    // scan, plans a sort-merge join, and shuffles the index every
+    // batch — measured 230 MB/batch at ScaleBench 50×)
+    b.count()
+    val standing = lit(true)
+    val dupOf = minhashMatches(b, refSigs.withColumn("standing", standing),
+      refBuckets.getOrElse(minhashBucketTable(refSigs, k, bands))
+        .withColumn("standing", standing),
+      k, bands, minJaccard)
+    batch.join(dupOf.withColumnRenamed("doc_id", idCol), Seq(idCol), "left")
+      .withColumn("is_new", col("dup_of_ref").isNull)
+  }
+
+  /** The one MinHash probe: the verified matches of a batch's signatures
+    * against reference rows that carry a `standing` flag — (`doc_id`,
+    * `band`, `bucket`, `standing`) buckets and (`doc_id`, `hs`,
+    * `standing`) signatures. A standing reference row is always a
+    * candidate; a row of the batch itself (`standing = false`) only when
+    * its id is SMALLER than the probing doc's, the min-id keeper inside
+    * one batch. The flag, not the id, tells the two apart: the verify
+    * joins on (id, `standing`), so a standing doc re-offered under its
+    * own id meets its standing copy and never its batch self.
+    * [[minhashDedupAgainst]] passes an all-standing reference; the
+    * streaming text commit passes the standing tables ∪ the batch.
+    *
+    * Returns (`doc_id`, `dup_of_ref` = smallest verified ref id), one row
+    * per batch doc with a match. */
+  private[graft] def minhashMatches(batchSigs: DataFrame, refSigs: DataFrame,
+      refBuckets: DataFrame, k: Int, bands: Int, minJaccard: Double): DataFrame = {
     // The BATCH side is broadcast BY HINT, not left to the planner: the
     // operator's contract is batch ≪ corpus (a microbatch against the
     // accumulated table), so the build side is caller-bounded — this is
@@ -368,10 +381,12 @@ object Dedup {
     // ScaleBench 50× with the conversion, ~zero with the static hint).
     // With the hint the reference bucket index only ever STREAMS through
     // its column-pruned scan — per-batch shuffle follows the batch.
-    val candidates = refBuckets.getOrElse(minhashBucketTable(refSigs, k, bands)).as("o")
-      .join(broadcast(minhashBucketTable(b, k, bands)).as("n"),
-        col("n.band") === col("o.band") && col("n.bucket") === col("o.bucket"))
-      .select(col("n.doc_id").as("batch_id"), col("o.doc_id").as("ref_id"))
+    val candidates = refBuckets.as("o")
+      .join(broadcast(minhashBucketTable(batchSigs, k, bands)).as("n"),
+        col("n.band") === col("o.band") && col("n.bucket") === col("o.bucket") &&
+          (col("o.standing") || col("o.doc_id") < col("n.doc_id")))
+      .select(col("n.doc_id").as("batch_id"), col("o.doc_id").as("ref_id"),
+        col("o.standing").as("standing"))
       .distinct()
     // the verify side is PRUNED to candidate ref ids BEFORE the wide hs
     // column joins: without the semi-join the verify shuffles the WHOLE
@@ -383,20 +398,19 @@ object Dedup {
     // candidates join above — the id set is (batch × matches)-sized,
     // 8 bytes per id, under the same microbatch contract.
     val refNeeded = refSigs
-      .select(col("doc_id").as("ref_id"), col("hs").as("hs_r"))
-      .join(broadcast(candidates.select("ref_id").distinct()),
-        Seq("ref_id"), "left_semi")
-    val dupOf = candidates
-      .join(b.select(col("doc_id").as("batch_id"), col("hs").as("hs_b")), Seq("batch_id"))
-      .join(refNeeded, Seq("ref_id"))
+      .select(col("doc_id").as("ref_id"), col("standing"), col("hs").as("hs_r"))
+      .join(broadcast(candidates.select("ref_id", "standing").distinct()),
+        Seq("ref_id", "standing"), "left_semi")
+    candidates
+      .join(batchSigs.select(col("doc_id").as("batch_id"), col("hs").as("hs_b")),
+        Seq("batch_id"))
+      .join(refNeeded, Seq("ref_id", "standing"))
       .withColumn("n_shared", size(array_intersect(col("hs_b"), col("hs_r"))))
       .filter(col("n_shared").cast(DoubleType) /
         (size(col("hs_b")) + size(col("hs_r")) - col("n_shared")).cast(DoubleType)
           >= minJaccard)
-      .groupBy(col("batch_id").as(idCol))
+      .groupBy(col("batch_id").as("doc_id"))
       .agg(min(col("ref_id")).as("dup_of_ref"))
-    batch.join(dupOf, Seq(idCol), "left")
-      .withColumn("is_new", col("dup_of_ref").isNull)
   }
 
   /** 64-bit SimHash per document — a pure map operator, zero shuffle:
@@ -547,7 +561,7 @@ object Dedup {
     // per corpus otherwise accumulates for the session lifetime), and a
     // long-lived streaming loop calling this core must pass
     // sizeByVolume=false (streaming sinks probe through
-    // `hash64DedupAgainst` instead, which caches nothing)
+    // `hash64Matches` instead, which caches nothing)
     val width = math.max(shufflePartitions(sigs),
       math.min(16384L, candidateInstances / 1000000L + 1).toInt)
     val repartitioned = keptChunks.repartition(width)
@@ -590,7 +604,7 @@ object Dedup {
       .select(col("modality"), col("cb.chunk").as("chunk"), col("cb.v").as("v"),
         col("doc_id"), col("simhash"))
 
-  /** Hot-bucket cap of [[hash64DedupAgainst]]: a reference
+  /** Hot-bucket cap of [[hash64Matches]]: a STANDING reference
     * (`modality`, `chunk`, `v`) bucket holding more rows is dropped from
     * candidate generation (with 16-bit chunks a billion-row index
     * averages thousands per bucket — the cap bounds the pathological
@@ -607,36 +621,53 @@ object Dedup {
     * (`modality`, `chunk`, `v`), so every modality is probed in the one
     * join and no signature ever matches one of another modality.
     *
+    * Returns one row per (`doc_id`, `modality`): (`doc_id`, `modality`,
+    * `dup_of_ref` = min matching ref id or null, `hamming` of that
+    * match or null, `is_new`). */
+  def hash64DedupAgainst(batchSigs: DataFrame, refBuckets: DataFrame,
+      maxHamming: Int = 8): DataFrame =
+    batchSigs.select(col("doc_id"), col("modality"))
+      .join(hash64Matches(batchSigs,
+          refBuckets.withColumn("standing", lit(true)), maxHamming),
+        Seq("doc_id", "modality"), "left")
+      .withColumn("is_new", col("dup_of_ref").isNull)
+
+  /** The one 64-bit Hamming probe, the [[minhashMatches]] rule over
+    * [[hash64BucketTable]] rows that carry a `standing` flag: a standing
+    * reference row is always a candidate, a row of the batch itself only
+    * when its id is smaller than the probing doc's.
+    *
     * The batch side explodes each signature's 4 chunks through the
     * ≤ ⌊maxHamming/4⌋ bit-flip mask set and is broadcast BY HINT (the
     * microbatch contract — same static-vs-AQE timing reason as the
     * minhash probe); the reference index only ever streams through its
     * column-pruned scan. Exact `bit_count` verify on the joined row.
+    * Over-cap buckets ([[Hash64MaxBucketSize]]) are counted on, and
+    * dropped from, the standing rows only.
     *
-    * Over-cap REFERENCE buckets ([[Hash64MaxBucketSize]]) are dropped
-    * from candidate generation.
-    *
-    * Returns one row per (`doc_id`, `modality`): (`doc_id`, `modality`,
-    * `dup_of_ref` = min matching ref id or null, `hamming` of that
-    * match or null, `is_new`). */
-  def hash64DedupAgainst(batchSigs: DataFrame, refBuckets: DataFrame,
-      maxHamming: Int = 8): DataFrame = {
+    * Returns (`doc_id`, `modality`, `dup_of_ref` = min verified ref id,
+    * `hamming` of that match), one row per matched (`doc_id`,
+    * `modality`). */
+  private[graft] def hash64Matches(batchSigs: DataFrame, refBuckets: DataFrame,
+      maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming out of range [0, 15]: $maxHamming")
     val budget = maxHamming / 4
     val masks: Seq[Long] = (0 to budget).flatMap(k =>
       (0 until 16).combinations(k).map(_.foldLeft(0L)((m, b) => m | (1L << b))))
-    val hot = refBuckets.groupBy(col("modality"), col("chunk"), col("v"))
+    val hot = refBuckets.filter(col("standing"))
+      .groupBy(col("modality"), col("chunk"), col("v"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > Hash64MaxBucketSize)
-      .select("modality", "chunk", "v")
-    val kept = refBuckets.join(hot, Seq("modality", "chunk", "v"), "left_anti")
+      .select(col("modality"), col("chunk"), col("v"), lit(true).as("standing"))
+    val kept = refBuckets.join(hot, Seq("modality", "chunk", "v", "standing"), "left_anti")
     val probe = hash64BucketTable(batchSigs)
       .select(col("doc_id"), col("modality"), col("simhash"), col("chunk"),
         explode(array(masks.map(m => col("v").bitwiseXOR(lit(m))): _*)).as("v"))
-    val matches = kept.as("o")
+    kept.as("o")
       .join(broadcast(probe).as("n"), col("n.modality") === col("o.modality") &&
-        col("n.chunk") === col("o.chunk") && col("n.v") === col("o.v"))
+        col("n.chunk") === col("o.chunk") && col("n.v") === col("o.v") &&
+        (col("o.standing") || col("o.doc_id") < col("n.doc_id")))
       .select(col("n.doc_id").as("doc_id"), col("n.modality").as("modality"),
         col("o.doc_id").as("ref_id"),
         bit_count(col("n.simhash").bitwiseXOR(col("o.simhash"))).as("hamming"))
@@ -645,9 +676,6 @@ object Dedup {
       .agg(min(struct(col("ref_id"), col("hamming"))).as("m"))
       .select(col("doc_id"), col("modality"), col("m.ref_id").as("dup_of_ref"),
         col("m.hamming").as("hamming"))
-    batchSigs.select(col("doc_id"), col("modality"))
-      .join(matches, Seq("doc_id", "modality"), "left")
-      .withColumn("is_new", col("dup_of_ref").isNull)
   }
 
   /** Connected components over an undirected pair list — the step that

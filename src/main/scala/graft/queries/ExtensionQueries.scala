@@ -4831,8 +4831,8 @@ object ExtensionQueries {
     // incremental media dedup: a batch of perturbed twins (of the
     // standing 64 scenes + 64 clips) and genuinely-new variant-1 media
     // probed against the PERSISTED signature/bucket tables
-    // (hash64DedupAgainst — the probe writeStreamMediaDedup runs every
-    // microbatch). Hash-based → rows-only; q_check_media_dedup pins
+    // (hash64DedupAgainst — the probe core writeStreamMediaDedup runs
+    // every microbatch). Hash-based → rows-only; q_check_media_dedup pins
     // twin suppression and fresh-content admission per modality.
     "q_media_dedup" -> ((s, dir) => {
       val (_, bkts) = mediaRef(s, dir)

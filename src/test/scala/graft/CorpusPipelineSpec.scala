@@ -359,6 +359,24 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/sigs.buckets")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L, 11L))
+    // batch 2 — standing matches win over ids: a twin of standing 11
+    // under a SMALLER id, and standing doc 2 re-offered under its own
+    // id, both drop (a min-ref-id rule over standing ∪ batch keeps them)
+    commit(Seq(
+      (5L, "completely different content nothing shared with anything"),
+      (2L, other)), 2L)
+    val ids2 = spark.read.parquet(s"$dir/corpus")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids2 == Set(1L, 2L, 11L), s"got $ids2")
+    assert(spark.read.parquet(s"$dir/sigs").count() == 3)
+    // batch 3 — a chain A~B~C with A≁C (word-shingle Jaccard 0.65, 0.65
+    // and 0.41 at the 0.5 cut): the greedy min-id keeper drops B for A
+    // and C for B, so only A lands
+    def words(from: Int) = (from until from + 40).map(i => s"w$i").mkString(" ")
+    commit(Seq((30L, words(0)), (31L, words(8)), (32L, words(16))), 3L)
+    val ids3 = spark.read.parquet(s"$dir/corpus")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids3 == Set(1L, 2L, 11L, 30L), s"got $ids3")
   }
 
   test("writeStreamIndexed: mid-sequence crash replays to convergence, no index double-count") {

@@ -201,21 +201,26 @@ class IndexLockSpec extends SparkSpec {
     slow.start(); slowStarted.await()
     Thread.sleep(100)
     // breaker treats the 100ms-old lease as expired under a 50ms TTL
-    // and holds PAST the slow writer's exit
+    // and holds PAST the slow writer's exit AND the main thread's reads
+    // of its lock below — releasing on `slow.join()` alone raced them
     val breakerDone = new java.util.concurrent.CountDownLatch(1)
+    val lockRead = new java.util.concurrent.CountDownLatch(1)
     val breaker = new Thread(() => {
       IndexLock.withLock(spark, dir2, "breaker", leaseMs = 50L) {
         breakerHolding.countDown()
         slow.join() // outlive the displaced writer's release
+        lockRead.await(30, java.util.concurrent.TimeUnit.SECONDS)
         breakerDone.countDown()
       }
     })
     breaker.start(); breakerHolding.await(); slow.join()
     // the displaced writer has exited: the breaker's lock must survive
     val lockFile = new java.io.File(dir2, ".writer-lock")
-    assert(lockFile.exists(), "displaced writer deleted the breaker's lock")
-    val body = java.nio.file.Files.readString(lockFile.toPath)
-    assert(body.contains("verb=breaker"))
+    try {
+      assert(lockFile.exists(), "displaced writer deleted the breaker's lock")
+      val body = java.nio.file.Files.readString(lockFile.toPath)
+      assert(body.contains("verb=breaker"))
+    } finally lockRead.countDown()
     breaker.join(); breakerDone.await()
     // the breaker outlived its OWN 50ms lease, but release runs UNDER
     // the break ticket (verify+delete atomic wrt breaks), so deleting

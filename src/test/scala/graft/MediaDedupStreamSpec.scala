@@ -61,6 +61,15 @@ class MediaDedupStreamSpec extends SparkSpec {
     ).toDF(), 1L, corpus, sigs, maxHamming = 8)
     assert(corpusIds(corpus) == Set(1L, 2L, 12L))
     assert(spark.read.parquet(sigs).count() == 3)
+    // batch 2: a twin of standing 12 under a SMALLER id, and standing 2
+    // re-offered under its own id — both are standing matches, so both
+    // drop (a min-ref-id rule over standing ∪ batch would keep them)
+    CorpusPipeline.mediaCommit(Seq(
+      img(7L, 5L, perturb = true),
+      Media(2L, "audio/wav", TestWav(8000, 1, 16, s0))
+    ).toDF(), 2L, corpus, sigs, maxHamming = 8)
+    assert(corpusIds(corpus) == Set(1L, 2L, 12L))
+    assert(spark.read.parquet(sigs).count() == 3)
   }
 
   test("re-tagged MP3s dedup at every layer via the tag-invariant stream hash") {
