@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types._
 
 import graft.functions.{TextFunctions => TF}
 
@@ -154,9 +156,9 @@ object Search {
   //              sum them, so appends never rewrite existing rows.
   //
   // Document frequency is not stored: a term's df is the number of live
-  // docs holding a postings row for it, and the probe already gathers
-  // exactly those rows for its query terms, so it counts df from the
-  // gather and df can never disagree with the postings. (A `terms/` df
+  // docs holding a postings row for it, and the probe already collects
+  // exactly those rows for its query terms, so it counts df from them
+  // and df can never disagree with the postings. (A `terms/` df
   // table left by an older layout is never read.) Scores are
   // corpus-relative (df, avdl), and the probe re-derives both each run —
   // results over an appended index are IDENTICAL to a fresh build over
@@ -237,17 +239,13 @@ object Search {
       IndexLock.withLock(spark, indexDir, "delete") {
     require(graft.io.Sinks.parquetExists(spark, s"$indexDir/postings"),
       s"no standing index at $indexDir (postings/ is empty or absent)")
-    val delDir = s"$indexDir/deletes"
-    val incoming = ids.select(col(idCol).as("doc_id")).distinct()
-    val fresh = (if (graft.io.Sinks.parquetExists(spark, delDir))
-      incoming.join(spark.read.parquet(delDir), Seq("doc_id"), "left_anti")
-    else incoming)
+    val fresh = undeleted(spark, indexDir, ids.select(indexId(ids, idCol)).distinct())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = fresh.count()
       if (n > 0) {
-        fresh.write.mode("append").parquet(delDir)
-        spark.read.parquet(s"$indexDir/postings")
+        fresh.write.mode("append").parquet(s"$indexDir/deletes")
+        readIndex(spark, indexDir, "postings")
           .join(broadcast(fresh), Seq("doc_id"))
           .groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
           .agg((-count(lit(1))).as("n_docs"),
@@ -284,17 +282,14 @@ object Search {
 
   private def compactBody(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Unit = {
-    val delDir = s"$indexDir/deletes"
-    val hasDeletes = graft.io.Sinks.parquetExists(spark, delDir)
     graft.io.Sinks.rewriteParquetInPlace(spark, s"$indexDir/postings")(df =>
-      (if (hasDeletes)
-        df.join(broadcast(spark.read.parquet(delDir)), Seq("doc_id"), "left_anti")
-      else df)
+      undeleted(spark, indexDir, df)
         .repartition(col("term")).sortWithinPartitions(col("term"), col("doc_id")))
     graft.io.Sinks.rewriteParquetInPlace(spark, s"$indexDir/stats")(df =>
       df.agg(sum(col("n_docs")).as("n_docs"),
         sum(col("total_tokens")).as("total_tokens")))
-    if (hasDeletes)
+    val delDir = s"$indexDir/deletes"
+    if (graft.io.Sinks.parquetExists(spark, delDir))
       graft.io.Sinks.rewriteParquetInPlace(spark, delDir)(_.distinct())
   }
 
@@ -314,10 +309,27 @@ object Search {
     }
   }
 
+  // Declared schemas of the index's own dirs: no read of them runs a
+  // parquet schema-inference job. doc_id is bigint in every dir.
+  private val indexSchemas = Map("postings" -> "term STRING, doc_id BIGINT, dl BIGINT, tf BIGINT",
+    "stats" -> "n_docs BIGINT, total_tokens BIGINT", "deletes" -> "doc_id BIGINT")
+
+  private def readIndex(spark: SparkSession, indexDir: String, dir: String): DataFrame =
+    spark.read.schema(indexSchemas(dir)).parquet(s"$indexDir/$dir")
+
+  /** `idCol` of `df` as the index's bigint `doc_id`. A non-integral id
+    * column fails here, naming the column, not later at probe time. */
+  private def indexId(df: DataFrame, idCol: String): Column = {
+    val t = df.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"index id column '$idCol' must be integral, got ${t.simpleString}")
+    col(idCol).cast(LongType).as("doc_id")
+  }
+
   private def writeIndex(docs: DataFrame, indexDir: String, mode: String,
       idCol: String, textCol: String): Unit = {
     val toks = docs
-      .select(col(idCol).as("doc_id"), TF.tokens(col(textCol)).as("toks"))
+      .select(indexId(docs, idCol), TF.tokens(col(textCol)).as("toks"))
       .withColumn("dl", size(col("toks")).cast(LongType))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -333,73 +345,82 @@ object Search {
     } finally toks.unpersist()
   }
 
-  /** Top-`k` by BM25 from the standing index — the corpus text is never
-    * touched: the postings scan carries a pushed `term IN (...)` filter
-    * (literal query terms → parquet row-group skipping over the
-    * term-sorted layout), avdl comes from the KB-scale stats increments,
-    * df is counted over the gathered postings themselves, and the only
-    * shuffle is the per-doc gather of the matching postings.
+  /** Top-`k` by BM25 from the standing index, scored on the driver. The
+    * probe runs when called and returns a local frame of at most `k`
+    * rows. It runs two scan jobs and no shuffle: one collects the
+    * KB-scale `stats/` increments (n_docs, avdl), the other the live
+    * postings of the query terms ([[bm25LivePostings]]: a pushed
+    * `term IN (...)` filter over the term-sorted layout, and a broadcast
+    * anti-join against the `deletes/` registry while one exists, which
+    * adds its broadcast job). The corpus text is never touched.
     *
-    * BIT-PARITY with [[bm25TopK]]: the gather collects each doc's
-    * (term → tf) map — an ORDER-FREE aggregation, unlike a double sum —
-    * and the score is then the same fixed left-assoc fold over the query
-    * terms, with per-term df as single-row broadcast columns (order-free
-    * integer counts over the gathered docs). Every operand
-    * (tf, dl, df, n_docs, avdl) is an exact integer cast to double, so
-    * the whole score is the identical IEEE expression tree and the probe
-    * is directly oracle-able by the same SQL as the scan-side operator.
-    * Output: (doc_id, bm25), top-k ordered. */
-  def bm25IndexProbe(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+    * Driver contract: the probe's driver working set is the live postings
+    * of its query terms. `spark.driver.maxResultSize` bounds that set; a
+    * probe that exceeds it aborts with an error instead of running the
+    * driver out of memory. Whole-corpus ranking stays with [[bm25TopK]]
+    * and [[bm25TopKBatch]].
+    *
+    * BIT-PARITY with [[bm25TopK]]: df per term is the number of live
+    * postings rows holding it, the rows are grouped per (doc_id, dl), and
+    * each doc's score is the same IEEE expression tree summed by the same
+    * fixed left fold over the query terms (a term the doc lacks
+    * contributes 0.0). Every operand (tf, dl, df, n_docs, avdl) is an
+    * exact integer cast to double, and JVM doubles are the IEEE doubles
+    * Spark's generated code computes with, so the probe is oracle-able by
+    * the same SQL as the scan-side operator. Each job is labelled
+    * `graft bm25IndexProbe <indexDir> phase=stats|postings`.
+    * Output: (doc_id, bm25), score-descending with doc-id tie-break. */
+  def bm25IndexProbe(spark: SparkSession, indexDir: String,
       queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms.distinct == queryTerms, s"queryTerms must be distinct: $queryTerms")
     require(k > 0, s"k must be positive: $k")
-    val terms = queryTerms.indices
-    val stats = spark.read.parquet(s"$indexDir/stats")
-      .agg(sum(col("n_docs")).cast(DoubleType).as("n_docs"),
-        (sum(col("total_tokens")).cast(DoubleType) /
-          sum(col("n_docs")).cast(DoubleType)).as("avdl"))
-    // retracted docs (bm25IndexDelete registry) are masked before the
-    // gather — a broadcast anti-join over the term-pruned stream, gone
-    // entirely once compaction physically drops their rows
-    val matched = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("term").isin(queryTerms: _*)) // pushed to the parquet scan
-    val delDir = s"$indexDir/deletes"
-    val live = if (graft.io.Sinks.parquetExists(spark, delDir))
-      matched.join(broadcast(spark.read.parquet(delDir)), Seq("doc_id"), "left_anti")
-    else matched
-    // dl is constant per doc, so grouping on it too changes no group —
-    // and a grouping key survives column pruning, which keeps the df
-    // aggregate's gather identical to the scorer's: the shuffle is
-    // planned once and reused by both
-    val perDoc = live
-      .groupBy(col("doc_id"), col("dl"))
-      .agg(map_from_entries(collect_list(struct(col("term"), col("tf")))).as("tfs"))
-      .withColumn("dl", col("dl").cast(DoubleType))
-    // per-term df pivoted to one row of df0..dfm-1 columns: the live docs
-    // whose gathered map holds the term — an integer count, deterministic
-    // whatever the gather order. A term absent from the index counts 0 —
-    // harmless, since no doc carries tf > 0 for it.
-    val dfCols = terms.map(i =>
-      count(try_element_at(col("tfs"), lit(queryTerms(i))))
-        .cast(DoubleType).as(s"df$i"))
-    val dfRow = perDoc.agg(dfCols.head, dfCols.tail: _*)
-    val score = terms.map { i =>
-      val tf = coalesce(try_element_at(col("tfs"), lit(queryTerms(i))), lit(0L))
-        .cast(DoubleType)
-      when(tf > 0,
-        ((col("n_docs") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5))) *
-          (tf * lit(k1 + 1)) /
-          (tf + lit(k1) * (lit(1 - b) + lit(b) * (col("dl") / col("avdl")))))
-        .otherwise(lit(0.0))
-    }.reduce(_ + _) // fixed left-assoc fold — bm25TopK's exact sum order
-    perDoc
-      .crossJoin(broadcast(dfRow))
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), score.as("bm25"))
-      .filter(col("bm25") > 0)
-      .orderBy(col("bm25").desc, col("doc_id"))
-      .limit(k)
+    val label = s"graft bm25IndexProbe $indexDir phase="
+    val stats = described(spark, label + "stats")(readIndex(spark, indexDir, "stats").collect())
+    val live = described(spark, label + "postings")(
+      bm25LivePostings(spark, indexDir, queryTerms).collect())
+    // exact Long sums of the increments, cast once (an empty batch's
+    // increment carries a null total, which a sum skips)
+    def total(i: Int) = stats.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
+    val (n, avdl) = (total(0).toDouble, total(1).toDouble / total(0).toDouble)
+    val df = live.groupMapReduce(_.getAs[String]("term"))(_ => 1L)(_ + _)
+    val scored = live.groupBy(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("dl"))).toSeq
+      .map { case ((id, dl), rows) =>
+        val tfs = rows.map(r => r.getAs[String]("term") -> r.getAs[Long]("tf").toDouble).toMap
+        // a postings row has tf >= 1, so a held term is bm25TopK's tf > 0 branch
+        id -> queryTerms.map(t => tfs.get(t).fold(0.0) { tf =>
+          val d = df(t).toDouble
+          ((n - d + 0.5) / (d + 0.5)) * (tf * (k1 + 1)) /
+            (tf + k1 * ((1 - b) + b * (dl.toDouble / avdl)))
+        }).reduce(_ + _) // fixed left-assoc fold — bm25TopK's exact sum order
+      }
+    val top = scored.filter(_._2 > 0)
+      .sortWith { case ((i1, s1), (i2, s2)) => s1 > s2 || (s1 == s2 && i1 < i2) }.take(k)
+    spark.createDataFrame(top.map { case (id, s) => Row(id, s) }.asJava,
+      StructType.fromDDL("doc_id BIGINT, bm25 DOUBLE"))
+  }
+
+  /** The live postings `(term, doc_id, dl, tf)` of `queryTerms` that
+    * [[bm25IndexProbe]] collects. The `term IN` filter is pushed to the
+    * parquet scan (row-group skipping over the term-sorted layout), and
+    * docs in the `deletes/` registry are masked by a broadcast anti-join,
+    * which is gone once compaction physically drops their rows. */
+  private[graft] def bm25LivePostings(spark: SparkSession, indexDir: String,
+      queryTerms: Seq[String]): DataFrame = undeleted(spark, indexDir,
+    readIndex(spark, indexDir, "postings").filter(col("term").isin(queryTerms: _*)))
+
+  /** `df` without the docs in the `deletes/` registry: a broadcast
+    * anti-join while the registry exists. */
+  private def undeleted(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame =
+    if (!graft.io.Sinks.parquetExists(spark, s"$indexDir/deletes")) df
+    else df.join(broadcast(readIndex(spark, indexDir, "deletes")), Seq("doc_id"), "left_anti")
+
+  /** Runs `body` with `desc` as its jobs' description, then restores the
+    * caller's. */
+  private def described[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val prev = spark.sparkContext.getLocalProperty("spark.job.description")
+    spark.sparkContext.setJobDescription(desc)
+    try body finally spark.sparkContext.setJobDescription(prev)
   }
 }

@@ -233,8 +233,7 @@ class DedupSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = body
-      var prev = -1
-      while (counter.get != prev) { prev = counter.get; Thread.sleep(300) }
+      org.apache.spark.BusDrain(spark.sparkContext)
       (out, counter.get)
     } finally {
       spark.sparkContext.removeSparkListener(listener)

@@ -30,8 +30,7 @@ class PlanAuditSpec extends SparkSpec {
     "q_embed_ivfpq", "q_embed_pq_selfjoin", "q_check_pq_selfjoin",
     "q_jaccard_words", "q_embed_cosine",
     "q_bm25_topk", "q_bm25_batch", "q_check_bm25_batch",
-    "q_bm25_index_probe", "q_check_bm25_index", // same single-row stats shape
-    "q_bm25_after_delete", // the probe shape over the retracted index
+    "q_check_bm25_index", // bm25TopK's single-row stats shape
     "q_check_heavy_hitters", // single-row broadcast n_total frame
     "q_mixture_weights", // single-row broadcast denominator frame
     "q_corpus_composition", // single-row broadcast global-totals frame

@@ -108,7 +108,7 @@ class SearchSpec extends SparkSpec {
   test("standing index: probe plan pushes the term filter into the postings scan") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_plan").toString
     Search.bm25BuildIndex(corpus, dir)
-    val plan = Search.bm25IndexProbe(spark, dir, Seq("spark", "quantum"), k = 5)
+    val plan = Search.bm25LivePostings(spark, dir, Seq("spark", "quantum"))
       .queryExecution.executedPlan.toString
     // the pushed IN filter is what keeps probe IO tied to the query
     // vocabulary (row-group skipping over the term-sorted layout), and the
@@ -116,13 +116,8 @@ class SearchSpec extends SparkSpec {
     assert(plan.contains("PushedFilters: [In(term"),
       s"term filter not pushed to the postings scan:\n$plan")
     assert(!plan.toLowerCase.contains("text"), "probe plan touches corpus text")
-    // df is counted from the gathered postings: no df table is read
+    // df is counted from the collected postings: no df table is read
     assert(!plan.contains("/terms"), s"probe plan reads a terms table:\n$plan")
-    // the df aggregate and the scorer share one gather shuffle
-    val probe = Search.bm25IndexProbe(spark, dir, Seq("spark", "quantum"), k = 5)
-    probe.collect()
-    val ran = probe.queryExecution.executedPlan.toString
-    assert(ran.contains("ReusedExchange"), s"postings gathered twice:\n$ran")
     // no maintenance verb writes a terms/ dir either
     def noTermsDir(step: String): Unit =
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "terms")),
@@ -134,6 +129,86 @@ class SearchSpec extends SparkSpec {
     noTermsDir("delete")
     Search.bm25IndexCompact(spark, dir)
     noTermsDir("compact")
+  }
+
+  test("standing index: a probe runs 2 jobs (3 with deletes/), each labelled with its phase") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_jobs").toString
+    Search.bm25BuildIndex(corpus, dir)
+    val sc = spark.sparkContext
+    def probeJobs(): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          seen.add(String.valueOf(j.properties.getProperty("spark.job.description")))
+      }
+      // earlier jobs' queued events must not reach this listener
+      org.apache.spark.BusDrain(sc)
+      sc.addSparkListener(listener)
+      sc.setJobDescription("caller")
+      try {
+        val got = Search.bm25IndexProbe(spark, dir, Seq("spark", "quantum"), k = 5).collect()
+        assert(got.nonEmpty)
+        assert(sc.getLocalProperty("spark.job.description") == "caller",
+          "the probe did not restore the caller's job description")
+        org.apache.spark.BusDrain(sc)
+      } finally {
+        sc.removeSparkListener(listener)
+        sc.setJobDescription(null)
+      }
+      seen.toArray(Array.empty[String]).toSeq
+    }
+    val label = s"graft bm25IndexProbe $dir phase="
+    val plain = probeJobs()
+    assert(plain.size <= 2, s"probe ran ${plain.size} jobs: $plain")
+    assert(plain.toSet == Set(label + "stats", label + "postings"), plain)
+    assert(Search.bm25IndexDelete(spark, dir, Seq(1L).toDF("doc_id")) == 1L)
+    val masked = probeJobs()
+    assert(masked.size <= 3, s"probe with deletes/ ran ${masked.size} jobs: $masked")
+    assert(masked.toSet == Set(label + "stats", label + "postings"), masked)
+  }
+
+  test("standing index: probe is bit-identical to bm25TopK over the live docs (random corpora)") {
+    import org.apache.spark.sql.DataFrame
+    val vocab = Seq("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    def bits(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1)))).toSeq
+    (1 to 20).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val nDocs = 6 + rnd.nextInt(20)
+      // min of two draws skews toward the first words, so tokens repeat
+      // within a doc; zero-token docs count in n_docs and avdl too
+      val docs = rnd.shuffle((1L to 3L * nDocs).toList).take(nDocs).map(id => id ->
+        Seq.fill(rnd.nextInt(10))(vocab(math.min(rnd.nextInt(8), rnd.nextInt(8))))
+          .mkString(" "))
+      val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_parity").toString
+      Search.bm25BuildIndex(docs.take(nDocs / 2).toDF("doc_id", "text"), dir)
+      Search.bm25IndexAppend(docs.drop(nDocs / 2).toDF("doc_id", "text"), dir)
+      // victims hold tokens (a zero-token doc's n_docs decrement is the
+      // documented drift); one id was never indexed
+      val victims = rnd.shuffle(docs.filter(_._2.nonEmpty).map(_._1))
+        .take(1 + rnd.nextInt(3)) :+ (1000L + seed)
+      var live = docs
+      def check(state: String): Unit = {
+        val terms = rnd.shuffle(vocab :+ "absent").take(1 + rnd.nextInt(4))
+        val k = 1 + rnd.nextInt(nDocs)
+        val want = bits(Search.bm25TopK(live.toDF("doc_id", "text"), terms, k))
+        val got = bits(Search.bm25IndexProbe(spark, dir, terms, k))
+        assert(got == want, s"seed $seed $state, terms $terms, k $k")
+      }
+      check("after append")
+      Search.bm25IndexDelete(spark, dir, victims.toDF("doc_id"))
+      live = docs.filterNot(d => victims.contains(d._1))
+      check("after delete")
+      Search.bm25IndexCompact(spark, dir)
+      check("after compact")
+    }
+  }
+
+  test("standing index: a non-integral id column fails the build, naming the column") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25idx_id").toString
+    val e = intercept[IllegalArgumentException](Search.bm25BuildIndex(
+      Seq(("a1", "spark runs")).toDF("key", "text"), dir, idCol = "key"))
+    assert(e.getMessage.contains("'key'"), e.getMessage)
   }
 
   test("standing index: a stray terms/ table does not change probe scores") {
