@@ -187,20 +187,19 @@ class SearchSpec extends SparkSpec {
       // documented drift); one id was never indexed
       val victims = rnd.shuffle(docs.filter(_._2.nonEmpty).map(_._1))
         .take(1 + rnd.nextInt(3)) :+ (1000L + seed)
-      var live = docs
-      def check(state: String): Unit = {
+      def check(state: String, live: Seq[(Long, String)]): Unit = {
         val terms = rnd.shuffle(vocab :+ "absent").take(1 + rnd.nextInt(4))
         val k = 1 + rnd.nextInt(nDocs)
         val want = bits(Search.bm25TopK(live.toDF("doc_id", "text"), terms, k))
         val got = bits(Search.bm25IndexProbe(spark, dir, terms, k))
         assert(got == want, s"seed $seed $state, terms $terms, k $k")
       }
-      check("after append")
+      check("after append", docs)
       Search.bm25IndexDelete(spark, dir, victims.toDF("doc_id"))
-      live = docs.filterNot(d => victims.contains(d._1))
-      check("after delete")
+      val survivors = docs.filterNot(d => victims.contains(d._1))
+      check("after delete", survivors)
       Search.bm25IndexCompact(spark, dir)
-      check("after compact")
+      check("after compact", survivors)
     }
   }
 
